@@ -54,73 +54,45 @@ object Explain {
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
 
-    // The CSR-packed broadcast-state superstep plans (round 3): the whole
-    // superstep is InMemoryTableScan -> Project(kernel) -> Filter ->
-    // Project inside ONE WholeStageCodegen span — no aggregate, no
-    // exchange, no join. These are what Hedonic/PageRank/LPA.run execute
-    // per round on the broadcast-state strategy.
+    // The dense-index broadcast-state per-round plans — one per algorithm,
+    // the plans Hedonic/PageRank/LPA.run execute each round on hub-free
+    // graphs: InMemoryTableScan -> Project(kernel) -> Filter -> Project
+    // inside ONE WholeStageCodegen span — no aggregate, no exchange, no
+    // join. Hedonic and LPA state enters as a DeltaState.Payload resolved
+    // once per task, PageRank's as a bare primitive array.
     {
       import org.apache.spark.sql.functions._
       import spark.implicits._
-      import graft.util.StateMap
+      import graft.util.{DeltaState, StateMap}
       val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
         .map { case (a, b) => graft.model.Edge(a, b, 1.0) }.toDS()
       val symDf = graft.graph.GraphOps.symmetrize(edges).select("src", "dst")
-      val packed = graft.graph.PackedAdjacency.build(symDf, "src")
       val ids = (0L to 3L).toArray
       val sc = spark.sparkContext
-      val commR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, ids, 4)))
-      val sizeR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, Array.fill(4)(1L), 4)))
-      val rankR = new StateMap.Ref(sc.broadcast(StateMap.longDouble(ids, Array.fill(4)(0.25), 4)))
-      val degR = new StateMap.Ref(sc.broadcast(StateMap.longDouble(ids, Array.fill(4)(2.0), 4)))
-      val shapes = Seq(
-        "packed_hedonic_superstep" ->
-          graft.algo.Hedonic.stepPlanPacked(packed, commR, sizeR, 0.1,
-            graft.util.Portable.parityGate(col("id"), 0)),
-        "packed_pagerank_iteration" ->
-          graft.algo.PageRank.iterPlanPacked(packed, rankR, degR, 4.0,
-            graft.algo.PageRank.Config()),
-        "packed_lpa_step" ->
-          graft.algo.LabelPropagation.stepPlanPacked(packed, commR, lit(true)))
-      // Round-4 dense-index twins (the production path on hub-free
-      // graphs): same single-span shape, but state enters as bare
-      // primitive arrays read through int position arrays.
-      val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(4)(_.toLong), 4))
-      val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-      val commArrR = new StateMap.Ref(sc.broadcast(ids.clone()))
+      val pidx = graft.graph.PackedAdjacency.indexed(
+        graft.graph.PackedAdjacency.build(symDf, "src", deferCache = true),
+        ids, owned = true).get
       val qR = new StateMap.Ref(sc.broadcast(Array.fill(4)(0.125)))
-      // Round-5 delta-transport twin (the production per-round plan after
-      // the envelope fix): identical single-span shape; state enters as a
-      // DeltaState.Payload resolved once per task.
-      val dBase = sc.broadcast(new graft.util.DeltaState.FullState(
+      val dBase = sc.broadcast(new DeltaState.FullState(
         ids.clone(), ids.clone(), Array.fill(4)(1L)))
-      val dState = new StateMap.Ref(sc.broadcast(new graft.util.DeltaState.Payload(
-        graft.util.DeltaState.newRunId(), 0, 0, dBase,
+      val dState = new StateMap.Ref(sc.broadcast(new DeltaState.Payload(
+        DeltaState.newRunId(), 0, 0, dBase,
         Array.empty[Int], Array.empty[Long], Array.empty[Long], Array.empty[Long])))
-      val idxShapes = Seq(
-        "indexed_hedonic_superstep" ->
-          graft.algo.Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, 0.1,
-            graft.util.Portable.parityGate(col("id"), 0)),
+      val shapes = Seq(
         "delta_hedonic_superstep" ->
           graft.algo.Hedonic.stepPlanPackedIdxDelta(pidx, dState, 0.1,
             graft.util.Portable.parityGate(col("id"), 0)),
         "indexed_pagerank_iteration" ->
           graft.algo.PageRank.iterPlanPackedIdx(pidx, qR, None, 4.0,
             graft.algo.PageRank.Config()),
-        "indexed_lpa_step" ->
-          graft.algo.LabelPropagation.stepPlanPackedIdx(pidx, commArrR, lit(true)))
+        "delta_lpa_step" ->
+          graft.algo.LabelPropagation.stepPlanPackedIdxDelta(pidx, dState, lit(true)))
       shapes.foreach { case (name, df) =>
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name (broadcast-state strategy, per-round plan)\n\n```\n$plan```\n")
-      }
-      idxShapes.foreach { case (name, df) =>
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         sb.append(s"\n## $name (dense-index strategy, per-round plan)\n\n```\n$plan```\n")
       }
       pidx.unpersist()
-      packed.unpersist()
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

@@ -71,8 +71,9 @@ object SparkEntry {
     * reference the membership 3-4x (gather's neighbor+union sides, the
     * size aggregate, the current-community join): un-pinned, each
     * reference re-runs the 2E-row vertex distinct; pinned, one distinct
-    * job feeds a V-row cache every reference scans. Measured (BenchExtra
-    * m0pin_ab, sf0.1): q_payoff-shape 4.3-5.3 -> 2.8-2.9 s, spectrum
+    * job feeds a V-row cache every reference scans. Measured
+    * (OPTIMIZATION_r06.md, "Pinned m0 for the multi-reference analytics
+    * queries", sf0.1): q_payoff-shape 4.3-5.3 -> 2.8-2.9 s, spectrum
     * 3.6-3.9 -> 2.2 s, satisfaction 3.1-3.5 -> 2.0 s. Single-reference
     * sites (q_ari, q_induced) and the iterative runs (which collect or
     * pin their state internally) keep plain m0 — there the pin would be
@@ -150,7 +151,8 @@ object SparkEntry {
     // (3.9 -> 5.1 s): the pack build + dense-index remap never amortize
     // over one step. The MAP-state one-shot (bestLabels — broadcast label
     // map, no pack, no E-row join; the q_move1 trick) measured FASTER
-    // (2.4-2.9 -> 1.6-2.0 s, BenchExtra lpa1_ab) and is scale-gated with
+    // (2.4-2.9 -> 1.6-2.0 s, OPTIMIZATION_r06.md "Map-state one-shot for
+    // the single-step LPA queries") and is scale-gated with
     // step() as the over-budget fallback; value-identical (StrategySpec).
     "q_lpa1" -> ((s, dir) => {
       val e = graph(s, dir)

@@ -80,7 +80,9 @@ object ConnectedComponents {
     // to (AlgoSpec pins both paths against runNaive).
     val cap = math.min(maxDriverEdges, Int.MaxValue - 2L).toInt
     val eCap = edges.select(col("src"), col("dst")).limit(cap + 1).collect()
-    if (eCap.length <= maxDriverEdges) return runDriver(edges.sparkSession, eCap)
+    // against the CLAMPED cap: a budget past Int.MaxValue - 2 would
+    // otherwise pass a truncated collect
+    if (eCap.length <= cap) return runDriver(edges.sparkSession, eCap)
     // Per round: pin + cache-count (pinCount, InternalRow cache — no
     // row boxing) + the union-distinct job only when the counts already
     // agree; the previous round's count carries forward (the old loop

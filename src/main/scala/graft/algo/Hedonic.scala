@@ -49,11 +49,13 @@ import graft.io.{Checkpoint, Iterate}
   *  - Broadcast-state (V within Config.broadcastStateMaxRows): the state
   *    lives in DRIVER arrays between supersteps and re-enters the plan as
   *    broadcast primitive maps (graft.util.StateMap); the superstep is a
-  *    single single-stage job scanning the CSR-packed adjacency, with a
-  *    codegen'd per-vertex kernel doing gather+score+argmax in one pass
-  *    (PackedAdjacency / PackedKernels / stepPlanPacked) and a wanter-row
-  *    collect at the end. Nothing is pinned; wants/moved are counted on
-  *    the collected rows.
+  *    single single-stage job scanning the dense-index CSR-packed
+  *    adjacency, with a codegen'd per-vertex kernel doing
+  *    gather+score+argmax in one pass (PackedAdjacency / PackedKernels /
+  *    stepPlanPackedIdxDelta) and a wanter-row collect at the end. Nothing
+  *    is pinned; wants/moved are counted on the collected rows. A graph
+  *    with a hub vertex (a segmented pack, see PackedAdjacency) has no
+  *    index plan and takes the shuffle loop below.
   *  - Co-partitioned shuffle (the 1e9-vertex path): the new state is
   *    pinned (eager cache + RDD-lineage cut + stats barrier, see
   *    graft.io.Iterate) while the wants/moved counters ride the same pass
@@ -86,12 +88,6 @@ object Hedonic {
       // unweighted formula. Reference graphs are unweighted; parity
       // queries use the default.
       weighted: Boolean = false,
-      // Dense-index kernels for the broadcast-state path (hub-free graphs
-      // only — maxSegs > 1 falls back to the hash kernels): neighbor arrays
-      // remapped once to state-array positions, per-round broadcast = the
-      // bare values array. Decision-identical (shared kernel tails); kept
-      // switchable for the hash-vs-index A/B the scaling evidence rests on.
-      indexedState: Boolean = true,
       // Pack-shuffle partition count (None = session shuffle partitions).
       // Sizes the CSR build sort and the cache blocks (see
       // PackedAdjacency.build).
@@ -211,9 +207,9 @@ object Hedonic {
     (pinned, pinned.sums(0).toLong, pinned.sums(1).toLong)
   }
 
-  /** Broadcast-state superstep plan over BROADCAST-MAP state — the same
-    * decision function as stepPinned, different physical strategy (used by
-    * run() when V fits the broadcast budget).
+  /** Row-map superstep plan over BROADCAST-MAP state — the same decision
+    * function as stepPinned, different physical strategy (used by run()'s
+    * one-superstep path, where a pack build cannot amortize).
     *
     * The driver-resident state enters the plan as two
     * `sparkContext.broadcast` primitive maps (id -> community,
@@ -238,8 +234,7 @@ object Hedonic {
     * joins' drop of dst/id outside the state table; nodes with no gather
     * rows never reach the plan and the driver merge keeps their community.
     * Only rows with wants = true are collected — rows that decide "stay"
-    * change nothing and are counted nowhere, so the V-row collect shrinks
-    * to the mover frontier as the run converges. */
+    * change nothing and are counted nowhere. */
   private[graft] def stepPlanMap(
       sym: DataFrame,
       commOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
@@ -262,21 +257,7 @@ object Hedonic {
           .select(col("src").as("id"), StateMap.lookup(commOf, col("dst")).as("community"))
           .filter(col("community").isNotNull)
           .groupBy("id", "community").agg(sum(lit(1L)).as("friends"))
-    decideFromCounts(counts, commOf, sizeOf, alpha, weighted)
-      .select(col("id"), col("bestComm"), gate.as("doMove"))
-  }
-
-  /** Shared decide tail over per-(id, candidate community) friend counts:
-    * payoff -> canonical argmax -> strict-improvement filter. Feeds both
-    * the row-based stepPlanMap and stepPlanPacked's multi-segment (hub)
-    * branch, so hub decisions are expression-identical to the row plan. */
-  private[graft] def decideFromCounts(
-      counts: DataFrame,
-      commOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      alpha: Double,
-      weighted: Boolean = false): DataFrame = {
-    import graft.util.StateMap
+    // payoff -> canonical argmax -> strict-improvement filter
     val cand = counts
       .withColumn("csize", StateMap.lookup(sizeOf, col("community")))
       .withColumn("curComm", StateMap.lookup(commOf, col("id")))
@@ -304,95 +285,31 @@ object Hedonic {
             lit(0L) * (1.0 - alpha) - (col("curSize") - 1L) * alpha)).as("wants"),
         col("b.comm").as("bestComm"))
       .filter(col("wants"))
-      .select(col("id"), col("bestComm"))
+      .select(col("id"), col("bestComm"), gate.as("doMove"))
   }
 
-  /** CSR-packed superstep plan (the production broadcast-state path): a
-    * V-row scan of the packed adjacency where a codegen'd per-vertex
-    * kernel (PackedKernels.hedonicDecide) gathers, scores, and argmaxes in
-    * one pass — no aggregate operator, no per-edge rows. Multi-segment
-    * (hub) vertices flow through per-segment partial counts + a regular
-    * sum into the shared decide tail; the branch is elided when the build
-    * saw no hubs (maxSegs == 1, the common case). Decision-identical to
-    * stepPlanMap (PackedSpec pins both, including the hub branch). */
-  private[graft] def stepPlanPacked(
-      packed: graft.graph.PackedAdj,
-      commOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      alpha: Double,
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wtsOpt = if (packed.weighted) Some(col("wts")) else None
-    val dec1 = packed.df.filter(col("nsegs") === 1)
-      .select(col("id"),
-        PackedKernels.hedonicDecide(col("id"), col("nbrs"), wtsOpt, commOf, sizeOf, alpha)
-          .as("bestComm"))
-      .filter(col("bestComm").isNotNull)
-    val dec =
-      if (packed.maxSegs > 1) {
-        val counts =
-          if (packed.weighted)
-            packed.df.filter(col("nsegs") > 1)
-              .select(col("id"), explode(
-                PackedKernels.commCountsW(col("nbrs"), col("wts"), commOf)).as("cf"))
-              .select(col("id"), col("cf.community").as("community"),
-                col("cf.friends").as("friends"), col("cf.wfriends").as("wfriends"))
-              .groupBy("id", "community")
-              .agg(sum("friends").as("friends"), sum("wfriends").as("wfriends"))
-          else
-            packed.df.filter(col("nsegs") > 1)
-              .select(col("id"), explode(PackedKernels.commCounts(col("nbrs"), commOf)).as("cf"))
-              .select(col("id"), col("cf.community").as("community"), col("cf.friends").as("friends"))
-              .groupBy("id", "community").agg(sum("friends").as("friends"))
-        dec1.unionByName(decideFromCounts(counts, commOf, sizeOf, alpha, packed.weighted))
-      } else dec1
-    dec.select(col("id"), col("bestComm"), gate.as("doMove"))
-  }
-
-  /** Dense-index superstep plan (hub-free production path): same shape as
-    * stepPlanPacked's single-segment branch, but the kernel reads the
-    * per-round community state as a bare long[] through int position
-    * arrays (PackedAdjacency.reindex / PackedKernels.kHedonicIdx) —
-    * decision-identical by shared kernel tail. */
-  private[graft] def stepPlanPackedIdx(
-      pidx: graft.graph.PackedIdxAdj,
-      commArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      alpha: Double,
-      gate: org.apache.spark.sql.Column,
-      emitPos: Boolean = false): DataFrame = {
-    val wtsOpt = if (pidx.weighted) Some(col("wts")) else None
-    // emitPos: the driver-state loop keys its merge on the dense state
-    // POSITION (myIdx) so collected rows skip the id->index probe and can
-    // ride the primitive-array collect path. The gate stays on id — the
-    // parity decision is a function of the vertex id, not its position.
-    pidx.df
-      .select(col("id"), col("myIdx"),
-        PackedKernels.hedonicDecideIdx(col("myIdx"), col("nbrs"), wtsOpt,
-          commArr, sizeOf, alpha).as("bestComm"))
-      .filter(col("bestComm").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"),
-        col("bestComm"), gate.as("doMove"))
-  }
-
-  /** Delta-transport variant of stepPlanPackedIdx (the production
-    * driver-state plan): one Payload broadcast per round — base snapshot
-    * handle + cumulative overrides — instead of fresh O(V) comms/sizes
-    * broadcasts. Decision-identical (same kHedonicIdx kernel tail;
-    * PackedSpec pins it). */
+  /** Dense-index superstep plan (the broadcast-state loops' plan, hub-free
+    * graphs): a V-row scan of the reindexed packed adjacency where a
+    * codegen'd per-vertex kernel (PackedKernels.kHedonicIdx) gathers,
+    * scores, and argmaxes in one pass — no aggregate operator, no per-edge
+    * rows. State enters as one DeltaState.Payload broadcast per round
+    * (base snapshot handle + cumulative overrides). Rows are keyed by the
+    * dense state POSITION (myIdx), so the driver merge skips any id ->
+    * index probe (DeltaState.moves); the gate stays on id — the parity
+    * decision is a function of the vertex id, not its position.
+    * Decision-identical to stepPlanMap (PackedSpec pins it). */
   private[graft] def stepPlanPackedIdxDelta(
       pidx: graft.graph.PackedIdxAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
       alpha: Double,
-      gate: org.apache.spark.sql.Column,
-      emitPos: Boolean = false): DataFrame = {
+      gate: org.apache.spark.sql.Column): DataFrame = {
     val wtsOpt = if (pidx.weighted) Some(col("wts")) else None
     pidx.df
       .select(col("id"), col("myIdx"),
         PackedKernels.hedonicDecideIdxDelta(col("myIdx"), col("nbrs"), wtsOpt,
           stateR, alpha).as("bestComm"))
       .filter(col("bestComm").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"),
-        col("bestComm"), gate.as("doMove"))
+      .select(col("myIdx"), col("bestComm"), gate.as("doMove"))
   }
 
   /** M4 one-pass hedonic improvement at alpha = 0 (reference
@@ -516,44 +433,49 @@ object Hedonic {
     // separate count() job and then re-materialized the state inside
     // runDriverState). limit(budget+1) keeps an over-budget state off the
     // driver: the capped collect then just signals "too big" and the
-    // shuffle path recomputes from the frame.
+    // shuffle path recomputes from the frame. The length test is against
+    // the CLAMPED cap: a budget past Int.MaxValue - 2 would otherwise pass
+    // a truncated collect.
     val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
     val startCap = startMembers.select("id", "community").limit(cap + 1).collect()
-    val bcast = startCap.length <= cfg.broadcastStateMaxRows
 
-    if (bcast) {
+    if (startCap.length <= cap) {
       // ONE-superstep fast path (round 6): a single superstep never
       // amortizes the CSR pack build (exchange + sort + cache of the
       // E-row adjacency), so the single-ungated-step queries
       // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
       // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
-      // (BenchExtra move1_ab). Decision-identical: stepPlanMap is the same
-      // plan the driver-state loop uses on hub graphs (StrategySpec pins
-      // it against both the packed kernels and the shuffle path).
+      // (OPTIMIZATION_r06.md, "Hedonic one-superstep fast path").
+      // Decision-identical: StrategySpec pins it against the shuffle path,
+      // PackedSpec against the index kernel.
       if (cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
           ckpt.isEmpty && !cfg.trackPotential) {
         val ve = veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))
         return runMapOneShot(edges, startCap, startStep, a, 2 * ve._2, cfg)
       }
-      // Broadcast-state strategy iterates over the CSR-packed adjacency
-      // (one build-time shuffle, then V-row supersteps — see
-      // PackedAdjacency / stepPlanPacked).
+      // Broadcast-state strategy iterates over the dense-index CSR-packed
+      // adjacency (one build-time shuffle, then V-row supersteps — see
+      // PackedAdjacency / stepPlanPackedIdxDelta); a hub graph falls
+      // through to the shuffle loop.
       packedOpt.foreach(p => require(p.weighted == cfg.weighted,
         s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
       val packed = packedOpt.getOrElse {
         val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
         graft.graph.PackedAdjacency.build(
           GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
-          weighted = cfg.weighted, deferCacheIfHubFree = cfg.indexedState,
+          weighted = cfg.weighted, deferCache = true,
           partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
       }
-      val edgeCount = packed.degSum
-      return runDriverState(edges, packed, startCap, startStep, a, edgeCount, cfg,
-        ckpt, ownsPack = packedOpt.isEmpty)
+      val (ids, comms) = graft.util.StateMap.columns(startCap)
+      graft.graph.PackedAdjacency.indexed(packed, ids, owned = packedOpt.isEmpty) match {
+        case Some(pidx) => return runDriverState(edges, pidx, ids, comms, startStep, a, cfg, ckpt)
+        case None       => ()
+      }
     }
 
-    // Shuffle path: cached pre-partitioned on dst (the gather JOIN key);
-    // only the V-row members side re-exchanges per round.
+    // Shuffle path (over budget, or a hub graph): cached pre-partitioned on
+    // dst (the gather JOIN key); only the V-row members side re-exchanges
+    // per round.
     val sym = GraphOps.pinnedSym(edges, "dst", weighted = cfg.weighted, sorted = true)
     val edgeCount = sym.count()
 
@@ -597,9 +519,8 @@ object Hedonic {
   /** One-superstep broadcast-state execution without a pack build (see the
     * fast-path comment in run()): state enters as two broadcast primitive
     * maps, the superstep is stepPlanMap's single-stage gather+decide job
-    * over the symmetrized rows, and the merge is runDriverState's Row
-    * branch verbatim (only wanter rows come back; doMove carries the
-    * gate). */
+    * over the symmetrized rows, and only wanter rows come back (doMove
+    * carries the gate). */
   private def runMapOneShot(
       edges: Dataset[Edge],
       init0: Array[org.apache.spark.sql.Row], // pre-collected (id, community)
@@ -610,13 +531,11 @@ object Hedonic {
     val spark = edges.sparkSession
     val t0 = System.nanoTime()
     val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
+    val (ids, comms) = graft.util.StateMap.columns(init0)
     val idx = new scala.collection.mutable.LongMap[Int](n * 2)
     val sizes = new scala.collection.mutable.LongMap[Long]()
     var i = 0
     while (i < n) {
-      ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1)
       idx(ids(i)) = i
       sizes(comms(i)) = sizes.getOrElse(comms(i), 0L) + 1L
       i += 1
@@ -647,264 +566,80 @@ object Hedonic {
       k += 1
     }
     val wallMs = (System.nanoTime() - t0) / 1000000
-    // final state frame: same parallelize shape as runDriverState.stateDF
-    // (no LocalRelation — see that comment)
-    val idsL = ids; val commsL = comms
-    val slices = math.max(1,
-      math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(j => org.apache.spark.sql.Row(idsL(j), commsL(j)))
-    val out = spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-    (out, Vector(RunMetrics(startStep, moved, Double.NaN, wanted, edgeCount, wallMs)))
+    (graft.util.StateMap.frame(spark, ids, "community", comms),
+      Vector(RunMetrics(startStep, moved, Double.NaN, wanted, edgeCount, wallMs)))
   }
 
   /** Broadcast-strategy loop with DRIVER-RESIDENT state (V fits the
-    * broadcast budget by definition, so it fits the driver). The superstep
-    * plan is built ONCE over mutable Ref cells (two primitive maps: id ->
-    * community, community -> size, plus the round number for the gate)
-    * and re-collected every round with fresh contents (StateMap.Ref) —
-    * no per-round planning, codegen, or broadcast-variable churn. Each
-    * superstep is ONE single-stage Spark job collecting only the WANTER
-    * rows; nothing pinned, no cached state to release, no stats growth.
-    * All payoff/argmax/gate arithmetic stays IN-PLAN — identical
-    * expressions to the shuffle path — so results are bitwise-
-    * reproducible across strategies (StrategySpec) and DuckDB replay
-    * (q_hedonic_full etc.) is unaffected. */
+    * broadcast budget by definition, so it fits the driver) over the
+    * dense-index pack `pidx`, whose positions are those of `ids`/`comms`.
+    * The superstep plan (stepPlanPackedIdxDelta) is built ONCE over
+    * mutable Ref cells (the DeltaState payload, plus the round number for
+    * the gate) and re-collected every round with fresh contents
+    * (StateMap.Ref) — no per-round planning or codegen. Each superstep is
+    * ONE single-stage Spark job collecting only the WANTER rows; nothing
+    * pinned, no cached state to release, no stats growth. All
+    * payoff/argmax/gate arithmetic stays IN-PLAN — identical expressions
+    * to the shuffle path — so results are bitwise-reproducible across
+    * strategies (StrategySpec) and DuckDB replay (q_hedonic_full etc.) is
+    * unaffected. */
   private def runDriverState(
       edges: Dataset[Edge],
-      packed: graft.graph.PackedAdj,
-      init0: Array[org.apache.spark.sql.Row], // pre-collected (id, community)
+      pidx: graft.graph.PackedIdxAdj,
+      ids: Array[Long],
+      comms: Array[Long],
       startStep: Int,
       alpha: Double,
-      edgeCount: Long,
       cfg: Config,
-      ckpt: Option[Checkpoint],
-      ownsPack: Boolean = true): (DataFrame, Seq[RunMetrics]) = {
+      ckpt: Option[Checkpoint]): (DataFrame, Seq[RunMetrics]) = {
     val spark = edges.sparkSession
-    import spark.implicits._
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
-    }
-    // NOT a LocalRelation (ADVICE r3): `(0..n).toDF` serialized V rows into
-    // the plan on every checkpoint/potential call — a large per-round driver
-    // allocation near the 4M-row budget, and joining edges against a V-row
-    // LocalRelation re-introduced the broadcast-build job StateMap exists to
-    // avoid. Parallelize indices instead: the arrays cross once per job in
-    // the torrent-broadcast taskBinary, rows materialize in executors, and
-    // the resulting LogicalRDD has no stats — so potential()'s edge join
-    // never tries to broadcast-build the state side.
-    def stateDF: DataFrame = {
-      val idsL = ids; val commsL = comms
-      val slices = math.max(1,
-        math.min(spark.sparkContext.defaultParallelism, n / 65536 + 1))
-      val rdd = spark.sparkContext.parallelize(0 until n, slices)
-        .map(k => org.apache.spark.sql.Row(idsL(k), commsL(k)))
-      spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("community",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    }
-
-    val sc = spark.sparkContext
+    val edgeCount = pidx.degSum
+    def stateDF: DataFrame = graft.util.StateMap.frame(spark, ids, "community", comms)
     val timing = sys.env.get("SPARK_GRAFT_STEP_TIMING").exists(_.toBoolean)
-    // The superstep DataFrame is built ONCE and re-collected every round;
-    // only the Ref contents — per-round BROADCAST HANDLES — change between
-    // rounds (see StateMap.Ref): no per-superstep analysis/optimization/
-    // planning, tiny task closures, and the maps ship executor-cached via
-    // real broadcasts (shipping them inside the closure instead was
-    // measured 2x slower: every task re-deserialized 16+ MB of state).
     import graft.util.StateMap
-    val commR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
-    val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
+    val state = new graft.util.DeltaState.DriverState(spark.sparkContext, comms, withSizes = true)
     val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
     val gate =
       if (cfg.parityGating)
         graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
       else lit(true)
-    // Dense-index path (hub-free graphs): remap neighbor ids to state-array
-    // positions once, then each round broadcasts only the bare comms array
-    // (8 B/vertex vs ~32 B/vertex hash map) and the kernel does one direct
-    // read per neighbor. Hash-kernel path kept for hub graphs and for the
-    // scaling A/B (SPARK_GRAFT_INDEXED / Config.indexedState).
-    val useIdx = cfg.indexedState && packed.maxSegs == 1
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        // unpersist, not destroy: a lost cache partition re-runs the remap
-        // lineage, which still needs the broadcast re-shippable.
-        idxB.unpersist()
-        // the id-based cache is dead once the remap is live — unless the
-        // caller shared it (another algorithm's reindex still needs it).
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    // Delta transport (indexed path): the per-round broadcast is a small
-    // Payload (base handle + cumulative overrides) — see DeltaState. The
-    // hash path keeps bare-map broadcasts (hub graphs; ids aren't dense).
-    val stateR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.Payload]](null)
-    val stepDf = pidxOpt match {
-      case Some(pidx) =>
-        stepPlanPackedIdxDelta(pidx, stateR, alpha, gate, emitPos = true)
-      case None => stepPlanPacked(packed, commR, sizeR, alpha, gate)
-    }
-    // Indexed path: collect wanter rows as per-partition PRIMITIVE arrays
-    // (position, bestComm, doMove) straight off the codegen'd InternalRow
-    // iterator — the Row-based DataFrame.collect deserializes and boxes
-    // every row serially on the driver, a per-superstep cost that does not
-    // shrink with cluster size. toRdd is built ONCE; each collect()
-    // re-serializes the task closure, so the Ref-carried broadcast handles
-    // are picked up per round exactly as with DataFrame.collect.
-    val fastRdd =
-      if (useIdx) Some(stepDf.queryExecution.toRdd.mapPartitions { it =>
-        val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-        val cb = new scala.collection.mutable.ArrayBuilder.ofLong
-        val mb = new scala.collection.mutable.ArrayBuilder.ofBoolean
-        while (it.hasNext) {
-          val r = it.next()
-          pb += r.getInt(0); cb += r.getLong(1); mb += r.getBoolean(2)
-        }
-        Iterator.single((pb.result(), cb.result(), mb.result()))
-      })
-      else None
-    // Community sizes maintained INCREMENTALLY (O(moved) per round) — the
-    // old per-round O(V) rebuild was part of the cluster-invariant
-    // envelope the N->4N efficiency target punishes.
-    val driverSizes = new scala.collection.mutable.LongMap[Long](n * 2)
-    locally {
-      var j = 0
-      while (j < n) {
-        driverSizes(comms(j)) = driverSizes.getOrElse(comms(j), 0L) + 1L
-        j += 1
-      }
-    }
-    // Delta-transport bookkeeping (indexed path): cumulative ABSOLUTE
-    // overrides since the last full base snapshot.
-    val runId = graft.util.DeltaState.newRunId()
-    var baseBcast: org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.FullState] = null
-    var baseEpoch = startStep
-    val cumPos = new scala.collection.mutable.LongMap[Long]()  // pos -> comm
-    val cumSizes = new scala.collection.mutable.LongMap[Long]() // comm -> size
-    def sizesArrays(): (Array[Long], Array[Long]) = {
-      val ks = new Array[Long](driverSizes.size)
-      val vs = new Array[Long](driverSizes.size)
-      var j = 0
-      driverSizes.foreachEntry { (k, v) => ks(j) = k; vs(j) = v; j += 1 }
-      (ks, vs)
-    }
+    val moves = graft.util.DeltaState.moves(
+      stepPlanPackedIdxDelta(pidx, state.state, alpha, gate))
     var metrics = Vector.empty[RunMetrics]
     var superstep = startStep
     var converged = false
     while (!converged && superstep < cfg.maxSupersteps) {
       val t0 = System.nanoTime()
-      val tSizes = System.nanoTime()
-      if (useIdx) {
-        // refresh the base when the cumulative delta stops being "small";
-        // no job is in flight here, so destroying the old base is safe.
-        if (baseBcast == null || cumPos.size > n / 4) {
-          val (ks, vs) = sizesArrays()
-          val nb = sc.broadcast(new graft.util.DeltaState.FullState(comms.clone(), ks, vs))
-          if (baseBcast != null) baseBcast.destroy()
-          baseBcast = nb
-          baseEpoch = superstep
-          cumPos.clear(); cumSizes.clear()
-        }
-        val dp = new Array[Int](cumPos.size)
-        val dc = new Array[Long](cumPos.size)
-        var j = 0
-        cumPos.foreachEntry { (p, c) => dp(j) = p.toInt; dc(j) = c; j += 1 }
-        val sk = new Array[Long](cumSizes.size)
-        val sv = new Array[Long](cumSizes.size)
-        j = 0
-        cumSizes.foreachEntry { (k, v) => sk(j) = k; sv(j) = v; j += 1 }
-        stateR.value = sc.broadcast(new graft.util.DeltaState.Payload(
-          runId, superstep, baseEpoch, baseBcast, dp, dc, sk, sv))
-      } else {
-        commR.value = sc.broadcast(StateMap.longLong(ids, comms, n))
-        sizeR.value = sc.broadcast(StateMap.longLong(driverSizes))
-      }
+      state.publish(superstep)
       roundR.value = Integer.valueOf(superstep)
       val tLocal = System.nanoTime()
       // Every collected row is a wanter (wants = true pre-filtered in-plan);
       // doMove carries the gate. Non-wanters change nothing and are not
-      // collected — identical counters and state to the old full collect.
+      // collected.
       var wanted = 0L
       var moved = 0L
       var nRows = 0L
-      var tJob = 0L
-      // applyMove: state + incremental sizes (+ delta bookkeeping on the
-      // indexed path) in one place — the absolute size entries make the
-      // executor-side application idempotent (DeltaState scaladoc).
-      @inline def applyMove(at: Int, c: Long): Unit = {
-        val old = comms(at)
-        if (old != c) {
-          comms(at) = c
-          val so = driverSizes(old) - 1L
-          if (so == 0L) driverSizes.remove(old) else driverSizes(old) = so
-          driverSizes(c) = driverSizes.getOrElse(c, 0L) + 1L
-          if (useIdx) {
-            cumPos(at.toLong) = c
-            cumSizes(old) = so
-            cumSizes(c) = driverSizes(c)
+      val parts = moves.collect()
+      state.release()
+      val tJob = System.nanoTime()
+      var p = 0
+      while (p < parts.length) {
+        val (pos, cs, mv) = parts(p)
+        nRows += pos.length
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          if (at >= 0) { // positions outside the state table drop
+            wanted += 1
+            if (mv(k)) { moved += 1; state.move(at, cs(k)) }
           }
+          k += 1
         }
-      }
-      fastRdd match {
-        case Some(rdd) =>
-          val parts = rdd.collect()
-          stateR.value.destroy()
-          tJob = System.nanoTime()
-          var p = 0
-          while (p < parts.length) {
-            val (pos, cs, mv) = parts(p)
-            nRows += pos.length
-            var k = 0
-            while (k < pos.length) {
-              val at = pos(k)
-              if (at >= 0) { // positions outside the state table drop, as before
-                wanted += 1
-                if (mv(k)) { moved += 1; applyMove(at, cs(k)) }
-              }
-              k += 1
-            }
-            p += 1
-          }
-        case None =>
-          val rows = stepDf.collect()
-          commR.value.destroy()
-          sizeR.value.destroy()
-          tJob = System.nanoTime()
-          nRows = rows.length
-          var k = 0
-          while (k < rows.length) {
-            val r = rows(k)
-            idx.get(r.getLong(0)) match { // ids outside the state table drop
-              case Some(at) =>
-                wanted += 1
-                if (r.getBoolean(2)) { moved += 1; applyMove(at, r.getLong(1)) }
-              case None => ()
-            }
-            k += 1
-          }
+        p += 1
       }
       if (timing) System.err.println(
-        f"stepTiming ss=$superstep sizes=${(tSizes - t0) / 1e6}%.0f " +
-        f"local=${(tLocal - tSizes) / 1e6}%.0f job=${(tJob - tLocal) / 1e6}%.0f " +
+        f"stepTiming ss=$superstep local=${(tLocal - t0) / 1e6}%.0f " +
+        f"job=${(tJob - tLocal) / 1e6}%.0f " +
         f"merge=${(System.nanoTime() - tJob) / 1e6}%.0f rows=$nRows")
       val pot = if (cfg.trackPotential) potential(edges, stateDF, alpha) else Double.NaN
       val wallMs = (System.nanoTime() - t0) / 1000000
@@ -918,11 +653,8 @@ object Hedonic {
       converged = wanted == 0L
       superstep += 1
     }
-    if (baseBcast != null) baseBcast.destroy()
-    pidxOpt match {
-      case Some(pidx) => pidx.unpersist()
-      case None       => if (ownsPack) packed.unpersist()
-    }
+    state.close()
+    pidx.unpersist()
     (stateDF, metrics)
   }
 

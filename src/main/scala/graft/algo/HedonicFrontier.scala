@@ -43,17 +43,19 @@ object HedonicFrontier {
     // unweighted (cfg.weighted is ignored here as before).
     if (!cfg.weighted) {
       // one capped materialization = strategy decision + driver-state
-      // collect (see Hedonic.run)
+      // collect (see Hedonic.run, also for the clamped-cap comparison)
       val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
       val initCap = init.select("id", "community").limit(cap + 1).collect()
-      if (initCap.length <= cfg.broadcastStateMaxRows) {
+      if (initCap.length <= cap) {
         val packed = graft.graph.PackedAdjacency.build(
           GraphOps.symmetrize(edges).select("src", "dst"), "src",
-          weighted = false, deferCacheIfHubFree = true,
+          weighted = false, deferCache = true,
           partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
-        if (packed.maxSegs == 1)
-          return runDriverState(edges, packed, initCap, a, cfg)
-        packed.unpersist() // hub graph: fall through to the shuffle loop
+        val (ids, comms) = graft.util.StateMap.columns(initCap)
+        graft.graph.PackedAdjacency.indexed(packed, ids, owned = true) match {
+          case Some(pidx) => return runDriverState(edges, pidx, ids, comms, a, cfg)
+          case None       => () // hub graph: fall through to the shuffle loop
+        }
       }
     }
     // cached pre-partitioned on src: the per-superstep frontier semi-join
@@ -163,11 +165,12 @@ object HedonicFrontier {
   }
 
   /** Broadcast-state frontier loop (see run()). Per superstep:
-    *  - job 1 ("decide"): the packed superstep plan restricted to ACTIVE
-    *    vertices by a flag-array filter that PUSHES BELOW the decision
-    *    kernel (inactive vertices cost one boolean array read); collects
-    *    only wanter rows as primitive arrays, exactly like
-    *    Hedonic.runDriverState.
+    *  - job 1 ("decide"): Hedonic's index superstep plan
+    *    (stepPlanPackedIdxDelta, the same DeltaState transport as
+    *    Hedonic.runDriverState) restricted to ACTIVE vertices by a
+    *    flag-array filter that PUSHES BELOW the decision kernel (inactive
+    *    vertices cost one boolean array read); collects only wanter rows
+    *    as primitive arrays (DeltaState.moves).
     *  - job 2 ("activate", only when something moved): mover rows of the
     *    same cached pack, exploded to neighbor positions whose POST-move
     *    community differs from the mover's new community — the reference's
@@ -179,53 +182,22 @@ object HedonicFrontier {
     * destroyed right after their collect. Both plans are built ONCE and
     * re-collected with fresh Ref contents (StateMap.Ref). */
   private def runDriverState(edges: Dataset[Edge],
-      packed: graft.graph.PackedAdj, init0: Array[org.apache.spark.sql.Row],
+      pidx: graft.graph.PackedIdxAdj, ids: Array[Long], comms: Array[Long],
       alpha: Double, cfg: Hedonic.Config): (DataFrame, Seq[RunMetrics]) = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
+    val sc = edges.sparkSession.sparkContext
     import graft.util.StateMap
-    val edgeCount = packed.degSum
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
-    var i = 0
-    while (i < n) { ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1); i += 1 }
-    val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-    val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-    idxB.unpersist()
-    packed.unpersist() // deferCacheIfHubFree: the long-id pack was never cached
-
-    val driverSizes = new scala.collection.mutable.LongMap[Long](n * 2)
-    locally {
-      var j = 0
-      while (j < n) {
-        driverSizes(comms(j)) = driverSizes.getOrElse(comms(j), 0L) + 1L
-        j += 1
-      }
-    }
-
-    val commArrR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]](null)
-    val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
+    val edgeCount = pidx.degSum
+    val n = ids.length
+    val state = new graft.util.DeltaState.DriverState(sc, comms, withSizes = true)
     val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
     val activeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Boolean]]](null)
     val gate =
       if (cfg.parityGating)
         graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
       else lit(true)
-    val stepDf = Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, alpha, gate,
-        emitPos = true)
-      .filter(StateMap.flagAt(activeR, col("myIdx")))
-    val fastRdd = stepDf.queryExecution.toRdd.mapPartitions { it =>
-      val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-      val cb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val mb = new scala.collection.mutable.ArrayBuilder.ofBoolean
-      while (it.hasNext) {
-        val r = it.next()
-        pb += r.getInt(0); cb += r.getLong(1); mb += r.getBoolean(2)
-      }
-      Iterator.single((pb.result(), cb.result(), mb.result()))
-    }
+    val moves = graft.util.DeltaState.moves(
+      Hedonic.stepPlanPackedIdxDelta(pidx, state.state, alpha, gate)
+        .filter(StateMap.flagAt(activeR, col("myIdx"))))
 
     val moverR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Boolean]]](null)
     val postCommR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]](null)
@@ -250,12 +222,11 @@ object HedonicFrontier {
     var superstep = 0
     while (frontierSize > 0 && superstep < cfg.maxSupersteps) {
       val t0 = System.nanoTime()
-      commArrR.value = sc.broadcast(comms.clone())
-      sizeR.value = sc.broadcast(StateMap.longLong(driverSizes))
+      state.publish(superstep)
       activeR.value = sc.broadcast(active)
       roundR.value = Integer.valueOf(superstep)
-      val parts = fastRdd.collect()
-      commArrR.value.destroy(); sizeR.value.destroy(); activeR.value.destroy()
+      val parts = moves.collect()
+      state.release(); activeR.value.destroy()
       val moverFlags = new Array[Boolean](n)
       val nextActive = new Array[Boolean](n)
       var moved = 0L
@@ -270,14 +241,7 @@ object HedonicFrontier {
               moved += 1
               moverFlags(at) = true
               nextActive(at) = true // the mover's own optimum may shift
-              val old = comms(at)
-              val c = cs(k)
-              if (old != c) {
-                comms(at) = c
-                val so = driverSizes(old) - 1L
-                if (so == 0L) driverSizes.remove(old) else driverSizes(old) = so
-                driverSizes(c) = driverSizes.getOrElse(c, 0L) + 1L
-              }
+              state.move(at, cs(k))
             } else nextActive(at) = true // gated wanter stays active
           }
           k += 1
@@ -305,19 +269,8 @@ object HedonicFrontier {
       metrics :+= RunMetrics(superstep, moved, Double.NaN, frontierSize, edgeCount, wallMs)
       superstep += 1
     }
+    state.close()
     pidx.unpersist()
-    // result frame via parallelized indices (no LocalRelation / no stats —
-    // the Hedonic.runDriverState stateDF shape)
-    val idsL = ids; val commsL = comms
-    val slices = math.max(1,
-      math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(k => org.apache.spark.sql.Row(idsL(k), commsL(k)))
-    val out = spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-    (out, metrics)
+    (StateMap.frame(edges.sparkSession, ids, "community", comms), metrics)
   }
 }

@@ -22,11 +22,12 @@ import graft.io.Iterate
   * superstep where no node (gated or not) would change.
   *
   * Cost model: ONE job per iteration on both strategies. Broadcast-state
-  * (small V): labels live in DRIVER arrays between rounds and re-enter the
-  * plan as a broadcast id -> label primitive map read through codegen'd
-  * lookups (graft.util.StateMap); the single-stage job ends in a
+  * (small V, hub-free): labels live in DRIVER arrays between rounds and
+  * re-enter the plan as a DeltaState payload read by the dense-index
+  * packed kernel (stepPlanPackedIdxDelta); the single-stage job ends in a
   * changer-row collect and nothing is pinned (see Hedonic.runDriverState
-  * for the rationale and the measured serial-cost motivation). Shuffle path: the
+  * for the rationale and the measured serial-cost motivation). Shuffle
+  * path (over budget, or a hub graph): the
   * new labels are pinned while the would-change counter rides the
   * materialization pass as an accumulator (Iterate.pinSums); the previous
   * round's cache is released immediately.
@@ -64,32 +65,34 @@ object LabelPropagation {
           maxIter: Int = 30, parityGating: Boolean = true,
           weighted: Boolean = false,
           broadcastStateMaxRows: Long = 4000000L,
-          indexedState: Boolean = true,
           packedOpt: Option[graft.graph.PackedAdj] = None): DataFrame = {
     val init = initOpt
       .map(_.select(col("id"), col("label")))
       .getOrElse(GraphOps.vertices(edges).select(col("id"), col("id").as("label")))
     // one capped materialization = strategy decision + driver-state collect
-    // (see Hedonic.run)
+    // (see Hedonic.run, also for the clamped-cap comparison)
     val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
     val initCap = init.limit(cap + 1).collect()
-    val bcast = initCap.length <= broadcastStateMaxRows
-    if (bcast) {
-      // Broadcast-state strategy iterates over the CSR-packed adjacency
-      // (see PackedAdjacency / stepPlanPacked).
+    if (initCap.length <= cap) {
+      // Broadcast-state strategy iterates over the dense-index CSR-packed
+      // adjacency (see PackedAdjacency / stepPlanPackedIdxDelta); a hub
+      // graph falls through to the shuffle loop.
       packedOpt.foreach(p => require(p.weighted == weighted,
         s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
       val packed = packedOpt.getOrElse {
         val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
         val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-        graft.graph.PackedAdjacency.build(symDf, "src", weighted,
-          deferCacheIfHubFree = indexedState)
+        graft.graph.PackedAdjacency.build(symDf, "src", weighted, deferCache = true)
       }
-      return runDriverState(edges.sparkSession, packed, initCap, maxIter,
-        parityGating, weighted, indexedState, ownsPack = packedOpt.isEmpty)
+      val (ids, labs) = graft.util.StateMap.columns(initCap)
+      graft.graph.PackedAdjacency.indexed(packed, ids, owned = packedOpt.isEmpty) match {
+        case Some(pidx) =>
+          return runDriverState(edges.sparkSession, pidx, ids, labs, maxIter, parityGating)
+        case None => ()
+      }
     }
-    // Shuffle path: cached pre-partitioned on dst (the join key); only the
-    // V-row label side re-exchanges per round.
+    // Shuffle path (over budget, or a hub graph): cached pre-partitioned on
+    // dst (the join key); only the V-row label side re-exchanges per round.
     val sym = GraphOps.pinnedSym(edges, "dst", weighted, sorted = true)
 
     var labels = Iterate.pin(init)
@@ -129,20 +132,17 @@ object LabelPropagation {
   def bestLabels(sym: DataFrame, labels: DataFrame, weighted: Boolean = false,
                  broadcastStateMaxRows: Long = 4000000L): DataFrame = {
     val spark = labels.sparkSession
+    // clamped-cap comparison: see Hedonic.run
     val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
     val lab0 = labels.select("id", "label").limit(cap + 1).collect()
-    if (lab0.length > broadcastStateMaxRows)
+    if (lab0.length > cap)
       return step(sym, labels, weighted).select(col("id"), col("bestLabel"))
     import graft.util.StateMap
     val n = lab0.length
-    val ids = new Array[Long](n)
-    val labs = new Array[Long](n)
+    val (ids, labs) = StateMap.columns(lab0)
     val idx = new scala.collection.mutable.LongMap[Int](n * 2)
     var i = 0
-    while (i < n) {
-      ids(i) = lab0(i).getLong(0); labs(i) = lab0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
-    }
+    while (i < n) { idx(ids(i)) = i; i += 1 }
     val sc = spark.sparkContext
     val labB = sc.broadcast(StateMap.longLong(ids, labs, n))
     val rows = stepPlanMap(sym, new StateMap.Ref(labB), weighted, lit(true)).collect()
@@ -153,17 +153,7 @@ object LabelPropagation {
       idx.get(r.getLong(0)).foreach(at => labs(at) = r.getLong(1))
       k += 1
     }
-    // same parallelize shape as the driver-state loops' stateDF (no
-    // LocalRelation — see Hedonic.runDriverState)
-    val idsL = ids; val labsL = labs
-    val slices = math.max(1, math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(j => org.apache.spark.sql.Row(idsL(j), labsL(j)))
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("bestLabel",
-        org.apache.spark.sql.types.LongType, nullable = false))))
+    StateMap.frame(spark, ids, "bestLabel", labs)
   }
 
   /** The driver-state iteration's plan over a broadcast id -> label map
@@ -186,180 +176,82 @@ object LabelPropagation {
       .filter(col("nbrLabel").isNotNull)
       .groupBy("id", "nbrLabel")
       .agg(vote.as("cnt"))
-    decideFromVotes(votes, labOf)
-      .select(col("id"), col("bestLabel"), gate.as("g"))
-  }
-
-  /** Shared decide tail over per-(id, label) vote sums: canonical argmax
-    * (count desc, smallest label) + changed-only filter. Feeds both the
-    * row-based stepPlanMap and stepPlanPacked's multi-segment (hub)
-    * branch. */
-  private[graft] def decideFromVotes(votes: DataFrame,
-      labOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]])
-      : DataFrame = {
-    import graft.util.StateMap
+    // canonical argmax (count desc, smallest label) + changed-only filter
     votes
       .groupBy("id").agg(
         max(struct(col("cnt"), (-col("nbrLabel")).as("neg"), col("nbrLabel").as("lab"))).as("b"))
       .withColumn("cur", StateMap.lookup(labOf, col("id")))
       .filter(col("cur").isNotNull && col("b.lab") =!= col("cur"))
-      .select(col("id"), col("b.lab").as("bestLabel"))
+      .select(col("id"), col("b.lab").as("bestLabel"), gate.as("g"))
   }
 
-  /** CSR-packed step plan (the production broadcast-state path): a V-row
-    * scan of the packed adjacency where a codegen'd per-vertex kernel
-    * (PackedKernels.labelDecide) tallies neighbor labels and argmaxes in
-    * one pass — no aggregate operator on the common path. Multi-segment
-    * (hub) vertices flow through per-segment partial votes + a regular sum
-    * into the shared decide tail; the branch is elided when the build saw
-    * no hubs. Decision-identical to stepPlanMap (PackedSpec). */
-  private[graft] def stepPlanPacked(packed: graft.graph.PackedAdj,
-      labOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wcol = if (packed.weighted) Some(col("wts")) else None
-    val dec1 = packed.df.filter(col("nsegs") === 1)
-      .select(col("id"),
-        PackedKernels.labelDecide(col("id"), col("nbrs"), wcol, labOf).as("bestLabel"))
-      .filter(col("bestLabel").isNotNull)
-    val dec =
-      if (packed.maxSegs > 1) {
-        val votes = packed.df.filter(col("nsegs") > 1)
-          .select(col("id"), explode(PackedKernels.labelVotes(col("nbrs"), wcol, labOf)).as("lv"))
-          .select(col("id"), col("lv.nbrLabel").as("nbrLabel"), col("lv.cnt").as("cnt"))
-          .groupBy("id", "nbrLabel").agg(sum("cnt").as("cnt"))
-        dec1.unionByName(decideFromVotes(votes, labOf))
-      } else dec1
-    dec.select(col("id"), col("bestLabel"), gate.as("g"))
-  }
-
-  /** Broadcast-strategy loop with DRIVER-RESIDENT labels; exactly one
-    * Spark job (ending in a V-row collect) per iteration. Decision
-    * semantics identical to the shuffle loop: `wants` = majority label
-    * differs (counted BEFORE gating, so convergence is gate-independent);
-    * a node absent from the vote table keeps its label. */
-  /** Dense-index step plan (hub-free production path; see
-    * Hedonic.stepPlanPackedIdx). */
-  private[graft] def stepPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
-      labArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wcol = if (pidx.weighted) Some(col("wts")) else None
-    pidx.df
-      .select(col("id"),
-        PackedKernels.labelDecideIdx(col("myIdx"), col("nbrs"), wcol, labArr)
-          .as("bestLabel"))
-      .filter(col("bestLabel").isNotNull)
-      .select(col("id"), col("bestLabel"), gate.as("g"))
-  }
-
-  /** Delta-transport twin (see Hedonic.stepPlanPackedIdxDelta /
-    * DeltaState): labels ride the Payload's comms lane; decisions use the
-    * same kLabelIdx tail, so results are identical (PackedSpec pins). */
+  /** Dense-index step plan (the broadcast-state loop's plan, hub-free
+    * graphs; see Hedonic.stepPlanPackedIdxDelta): a codegen'd per-vertex
+    * kernel (PackedKernels.kLabelIdx) tallies neighbor labels and argmaxes
+    * in one pass; labels ride the DeltaState payload's comms lane. Rows
+    * are keyed by state POSITION (myIdx) for DeltaState.moves.
+    * Decision-identical to stepPlanMap (PackedSpec pins it). */
   private[graft] def stepPlanPackedIdxDelta(pidx: graft.graph.PackedIdxAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
       gate: org.apache.spark.sql.Column): DataFrame = {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
     pidx.df
-      .select(col("id"),
+      .select(col("id"), col("myIdx"),
         PackedKernels.labelDecideIdxDelta(col("myIdx"), col("nbrs"), wcol, stateR)
           .as("bestLabel"))
       .filter(col("bestLabel").isNotNull)
-      .select(col("id"), col("bestLabel"), gate.as("g"))
+      .select(col("myIdx"), col("bestLabel"), gate.as("g"))
   }
 
+  /** Broadcast-strategy loop with DRIVER-RESIDENT labels over the
+    * dense-index pack `pidx` (positions of `ids`/`labs`); exactly one
+    * Spark job (ending in a changer-row collect) per iteration. Decision
+    * semantics identical to the shuffle loop: `wants` = majority label
+    * differs (counted BEFORE gating, so convergence is gate-independent);
+    * a node absent from the vote table keeps its label. */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, init0: Array[org.apache.spark.sql.Row],
-      maxIter: Int, parityGating: Boolean, weighted: Boolean,
-      indexedState: Boolean = true, ownsPack: Boolean = true): DataFrame = {
+      pidx: graft.graph.PackedIdxAdj, ids: Array[Long], labs: Array[Long],
+      maxIter: Int, parityGating: Boolean): DataFrame = {
     import spark.implicits._
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val labs = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = init0(i).getLong(0); labs(i) = init0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
-    }
-    // Plan built once; Refs carry per-round broadcast handles (see
-    // StateMap.Ref and Hedonic.runDriverState).
     import graft.util.StateMap
-    val sc = spark.sparkContext
-    val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
+    // Plan built once; Refs carry per-round broadcast handles (see
+    // StateMap.Ref and Hedonic.runDriverState). Labels ride the payload's
+    // comms lane; the size lane stays empty.
+    val state = new graft.util.DeltaState.DriverState(spark.sparkContext, labs, withSizes = false)
     val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
     val gate =
       if (parityGating) graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
       else lit(true)
-    // Dense-index path (hub-free graphs; see Hedonic.runDriverState).
-    val useIdx = indexedState && packed.maxSegs == 1
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        // shared packs stay cached for the caller's other algorithms
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    // Delta transport (indexed path; labels in the Payload's comms lane,
-    // size lane empty) — see DeltaState and Hedonic.runDriverState.
-    val stateR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.Payload]](null)
-    val stepDf = pidxOpt match {
-      case Some(pidx) => stepPlanPackedIdxDelta(pidx, stateR, gate)
-      case None       => stepPlanPacked(packed, labR, gate)
-    }
-    val runId = graft.util.DeltaState.newRunId()
-    var baseBcast: org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.FullState] = null
-    var baseEpoch = 0
-    val cumPos = new scala.collection.mutable.LongMap[Long]() // pos -> label
-    val emptyL = Array.empty[Long]
+    val moves = graft.util.DeltaState.moves(stepPlanPackedIdxDelta(pidx, state.state, gate))
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      if (useIdx) {
-        if (baseBcast == null || cumPos.size > n / 4) {
-          val nb = sc.broadcast(new graft.util.DeltaState.FullState(
-            labs.clone(), emptyL, emptyL))
-          if (baseBcast != null) baseBcast.destroy()
-          baseBcast = nb; baseEpoch = iter; cumPos.clear()
-        }
-        val dp = new Array[Int](cumPos.size)
-        val dc = new Array[Long](cumPos.size)
-        var j = 0
-        cumPos.foreachEntry { (p, c) => dp(j) = p.toInt; dc(j) = c; j += 1 }
-        stateR.value = sc.broadcast(new graft.util.DeltaState.Payload(
-          runId, iter, baseEpoch, baseBcast, dp, dc, emptyL, emptyL))
-      } else labR.value = sc.broadcast(StateMap.longLong(ids, labs, n))
+      state.publish(iter)
       roundR.value = Integer.valueOf(iter)
-      val rows = stepDf.collect()
-      if (useIdx) stateR.value.destroy() else labR.value.destroy()
+      val parts = moves.collect()
+      state.release()
       // Every collected row is a changer (best != current, filtered
-      // in-plan) — identical counters and state to the old full collect.
+      // in-plan); the gate flag decides whether it applies.
       var wanted = 0L
-      var k = 0
-      while (k < rows.length) {
-        val r = rows(k)
-        idx.get(r.getLong(0)) match {
-          case Some(at) =>
+      var p = 0
+      while (p < parts.length) {
+        val (pos, ls, mv) = parts(p)
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          if (at >= 0) {
             wanted += 1
-            if (r.getBoolean(2)) {
-              labs(at) = r.getLong(1)
-              if (useIdx) cumPos(at.toLong) = r.getLong(1)
-            }
-          case None => ()
+            if (mv(k)) state.move(at, ls(k))
+          }
+          k += 1
         }
-        k += 1
+        p += 1
       }
       done = wanted == 0L
       iter += 1
     }
-    if (baseBcast != null) baseBcast.destroy()
-    pidxOpt match {
-      case Some(pidx) => pidx.unpersist()
-      case None       => if (ownsPack) packed.unpersist()
-    }
-    (0 until n).map(k => (ids(k), labs(k))).toDF("id", "label")
+    state.close()
+    pidx.unpersist()
+    ids.indices.map(k => (ids(k), labs(k))).toDF("id", "label")
   }
 }

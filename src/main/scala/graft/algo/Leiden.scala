@@ -37,7 +37,8 @@ object Leiden {
     // tried (a) with a pin — one eager job per merge round regressed
     // q_leiden_full ~1 s — and (b) via identical-subtree exchange reuse —
     // measured 0.43-0.54 -> 0.59-0.67 s per warm mergeGains call on the
-    // sf0.1 thin graph (BenchExtra leiden_ab): the heavier (ca, cb)
+    // sf0.1 thin graph (OPTIMIZATION_r06.md, "Measured and rejected this
+    // session": single-aggregate community contraction): the heavier (ca, cb)
     // grouping costs more than the shared pass saves at driver SF, and
     // the merge loop multiplies it. Kept in the original two-slice form
     // deliberately.

@@ -29,18 +29,18 @@ import graft.io.Iterate
   * sort-merge joins):
   *
   *  - broadcast-state (V <= broadcastStateMaxRows, no explicit vertex
-  *    table): the rank vector lives in DRIVER arrays between iterations;
-  *    each round it re-enters the plan as a broadcast id -> rank primitive
-  *    map read through codegen'd lookups (graft.util.StateMap) inside a
-  *    scan of the edge table cached pre-partitioned on dst — the GROUPING
-  *    key — so the aggregate runs in place and the single job ends in a
-  *    V-row collect. An
+  *    table, hub-free graph): the rank vector lives in DRIVER arrays
+  *    between iterations; each round it re-enters the plan as one bare
+  *    primitive array broadcast read by a codegen'd per-vertex kernel
+  *    over the dense-index CSR-packed in-neighbor lists
+  *    (iterPlanPackedIdx), and the single job ends in a V-row collect. An
   *    iteration moves ZERO edge-scale rows through the shuffle and runs
   *    zero auxiliary jobs. This is what makes per-iteration cost scale
   *    with cores (the N->4N efficiency target): both the E-row exchange
   *    that saturates single-host shuffle bandwidth and the serial
   *    per-iteration driver cost (broadcast-build jobs, pins) are gone.
-  *  - co-partitioned shuffle (large V): edges cached partitioned on src
+  *  - co-partitioned shuffle (large V, or a hub graph — a segmented pack
+  *    has no index plan): edges cached partitioned on src
   *    (the join key); only the V-row state shuffles into the join, and the
   *    E-row contribution aggregate exchanges on dst. This is the 1e9-vertex
   *    path where broadcasting the state would be worse than the shuffle
@@ -64,12 +64,6 @@ object PageRank {
       // iteration; 0 forces the co-partitioned shuffle path (tests use
       // this to pin both strategies to the same fixtures).
       broadcastStateMaxRows: Long = 4000000L,
-      // Dense-index kernels on the broadcast-state path (hub-free graphs;
-      // see Hedonic.Config.indexedState): unweighted iterations broadcast
-      // one PRE-DIVIDED rank/deg array per round (one read per edge
-      // instead of two hash probes), weighted ones a rank array against a
-      // once-broadcast strength array. Bitwise-identical sums.
-      indexedState: Boolean = true,
       // Pack-shuffle partition count (None = session shuffle partitions);
       // see Hedonic.Config.packPartitions.
       packPartitions: Option[Int] = None,
@@ -91,10 +85,13 @@ object PageRank {
     * PageRank + LPA: the degree table is then derived from the cached
     * V-row pack (size(nbrs) / sum(wts)) instead of a second E-row
     * aggregate. Caller owns the pack's cache lifetime; its `weighted`
-    * flag must match cfg.weighted. */
+    * flag must match cfg.weighted. A hub pack (maxSegs > 1) has no index
+    * plan: such a run takes the shuffle loop and never reads the pack. */
   def runTimed(edges: Dataset[Edge], cfg: Config = Config(),
           verticesOpt: Option[DataFrame] = None,
           packedOpt: Option[graft.graph.PackedAdj] = None): (DataFrame, Seq[Long]) = {
+    packedOpt.foreach(p => require(p.weighted == cfg.weighted,
+      s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
     // Round-6 setup dedup for the COMMON case (edge-derived vertex set, no
     // prebuilt pack): ONE E-row degree aggregate yields the vertex count
     // (the strategy decision), the pack build's segmentation degrees, and
@@ -117,79 +114,42 @@ object PageRank {
         else degAgg.select(col("id"), col("d").cast("double").as("deg"))
       if (v <= cfg.broadcastStateMaxRows) {
         val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-          deferCacheIfHubFree = cfg.indexedState, partitions = cfg.packPartitions,
+          deferCache = true, partitions = cfg.packPartitions,
           cachePartitions = cfg.cachePartitions,
           degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
-        val out = runDriverState(spark, packed, deg, v, cfg, ownsPack = true)
-        packed.unpersist()
-        degAgg.unpersist()
-        return out
+        runDriverState(spark, packed, owned = true, deg, v, cfg) match {
+          case Some(out) => degAgg.unpersist(); return out
+          case None      => () // hub graph: the shuffle loop below
+        }
       }
-      // over-budget V: co-partitioned shuffle path, no dangling (min deg 1)
+      // over-budget V or a hub graph: co-partitioned shuffle path, no
+      // dangling (min deg 1)
       val out = runShuffle(edges, cfg, deg, v, mayDangle = false)
       degAgg.unpersist()
       return out
     }
-    // With a prebuilt pack the vertex count comes off the cached V-row
-    // pack (distinct over ids — multi-segment hubs repeat) instead of a
-    // 2E-row distinct over the raw edges.
-    val vertsOpt = packedOpt match {
-      case Some(_) if verticesOpt.isEmpty => None
-      case _ =>
-        val vt = verticesOpt.getOrElse(GraphOps.vertices(edges)).select("id").persist()
-        Some(vt)
-    }
-    val v = vertsOpt match {
-      case Some(vt) => vt.count().toDouble
-      case None     => packedOpt.get.df.select("id").distinct().count().toDouble
-    }
-    // Explicit vertex tables may contain dangling vertices, whose left-join
-    // handling needs the co-partitioned path; broadcast-state covers the
-    // engine's common case (edge-derived vertex set, min degree 1).
-    val bcast = verticesOpt.isEmpty && v <= cfg.broadcastStateMaxRows
-
-    if (bcast) {
-      // Broadcast-state strategy iterates over the CSR-packed in-neighbor
-      // lists (one build-time shuffle, then V-row iterations — see
-      // PackedAdjacency / iterPlanPacked).
-      packedOpt.foreach(p => require(p.weighted == cfg.weighted,
-        s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
-      val (packed, deg) = packedOpt match {
-        case Some(p) =>
-          // Degrees off the cached V-row pack (multi-segment hub vertices
-          // contribute one row per segment, hence the groupBy).
-          val d =
+    // A hub-free prebuilt pack with the edge-derived vertex set: vertex
+    // count and degrees come off the cached V-row pack (one row per vertex
+    // — size(nbrs) / sum(wts)) instead of a 2E-row distinct and a second
+    // E-row aggregate over the raw edges.
+    packedOpt match {
+      case Some(p) if verticesOpt.isEmpty && p.maxSegs == 1 =>
+        val v = p.df.count().toDouble
+        if (v <= cfg.broadcastStateMaxRows) {
+          val deg =
             if (cfg.weighted)
-              p.df.groupBy(col("id")).agg(
-                sum(aggregate(col("wts"), lit(0.0),
-                  (acc, x) => acc + x)).as("deg"))
-            else
-              p.df.groupBy(col("id")).agg(
-                sum(size(col("nbrs"))).cast("double").as("deg"))
-          (p, d)
-        case None =>
-          val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-          val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-          val d =
-            if (cfg.weighted)
-              symDf.groupBy(col("src").as("id")).agg(sum(col("weight").cast("double")).as("deg"))
-            else
-              symDf.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("deg"))
-          (graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-            deferCacheIfHubFree = cfg.indexedState, partitions = cfg.packPartitions,
-            cachePartitions = cfg.cachePartitions), d)
-      }
-      val out = runDriverState(edges.sparkSession, packed, deg, v, cfg,
-        ownsPack = packedOpt.isEmpty)
-      if (packedOpt.isEmpty) packed.unpersist()
-      vertsOpt.foreach(_.unpersist())
-      return out
+              p.df.select(col("id"), aggregate(col("wts"), lit(0.0), (acc, x) => acc + x).as("deg"))
+            else p.df.select(col("id"), size(col("nbrs")).cast("double").as("deg"))
+          return runDriverState(edges.sparkSession, p, owned = false, deg, v, cfg).get
+        }
+      case _ => ()
     }
-    // Over-budget V with a prebuilt pack: the shuffle path ignores the
-    // pack, so the vertex table is derived here after all.
-    val verts = vertsOpt.getOrElse {
-      val vt = GraphOps.vertices(edges).select("id").persist(); vt.count(); vt
-    }
+    // Shuffle path: an explicit vertex table (it may contain dangling
+    // vertices, whose left-join handling needs the co-partitioned path),
+    // over-budget V, or a hub pack — which the shuffle path ignores, so
+    // the vertex table is derived here.
+    val verts = verticesOpt.getOrElse(GraphOps.vertices(edges)).select("id").persist()
+    val v = verts.count().toDouble
     val symForDeg = GraphOps.symmetrize(edges)
     val deg =
       if (cfg.weighted)
@@ -256,74 +216,46 @@ object PageRank {
   }
 
   /** Broadcast-strategy loop with DRIVER-RESIDENT ranks (V fits the
-    * broadcast budget, hence the driver). The iteration plan is built
-    * ONCE over mutable Ref cells (rank map per round; degree map set
-    * once — degrees never change) and re-collected every round
-    * (StateMap.Ref): no per-round planning, codegen, or broadcast
-    * churn. An iteration is exactly ONE single-stage job: packed-
-    * adjacency scan, per-vertex contribution kernel, V-row collect;
-    * nothing is pinned. The rank update stays IN-PLAN,
-    * same arithmetic shape as the shuffle path's expression (rank/deg per
-    * contribution row); only the tol-mode |delta| sum moves to the driver
-    * (same values, different summation order — a stopping heuristic, not a
-    * result). No dangling term: this path requires an edge-derived vertex
-    * set (min degree 1). */
+    * broadcast budget, hence the driver) over the dense-index remap of
+    * `packed` (PackedAdjacency.indexed; None for a hub graph, whose caller
+    * then runs the shuffle loop). The iteration plan is built ONCE over
+    * mutable Ref cells and re-collected every round (StateMap.Ref): no
+    * per-round planning, codegen, or broadcast churn. An iteration is
+    * exactly ONE single-stage job: packed-adjacency scan, per-vertex
+    * contribution kernel, V-row collect; nothing is pinned. Per round ONE
+    * bare double[] is broadcast — the PRE-DIVIDED rank/deg when unweighted
+    * (kernel: one read per edge), the rank alone when weighted (strength
+    * array broadcast once; degrees never change). The rank update stays
+    * IN-PLAN, same arithmetic shape as the shuffle path's expression;
+    * only the tol-mode |delta| sum moves to the driver (same values,
+    * different summation order — a stopping heuristic, not a result). No
+    * dangling term: this path requires an edge-derived vertex set (min
+    * degree 1). */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, deg: DataFrame, v: Double,
-      cfg: Config, ownsPack: Boolean = true): (DataFrame, Seq[Long]) = {
+      packed: graft.graph.PackedAdj, owned: Boolean, deg: DataFrame, v: Double,
+      cfg: Config): Option[(DataFrame, Seq[Long])] = {
     import spark.implicits._
+    lazy val vd = deg.collect() // only for a hub-free pack
+    lazy val ids = vd.map(_.getLong(0))
+    val pidxOpt = graft.graph.PackedAdjacency.indexed(packed, ids, owned)
+    if (pidxOpt.isEmpty) return None
+    val pidx = pidxOpt.get
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val vd = deg.collect()
     val n = vd.length
-    val ids = new Array[Long](n)
-    val degs = new Array[Double](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = vd(i).getLong(0); degs(i) = vd(i).getDouble(1)
-      idx(ids(i)) = i; i += 1
-    }
-    // Plan built once; the rank Ref carries a per-round broadcast handle,
-    // the degree broadcast is set once — degrees never change (see
-    // StateMap.Ref and Hedonic.runDriverState).
+    val degs = vd.map(_.getDouble(1))
     import graft.util.StateMap
     val sc = spark.sparkContext
-    // Dense-index path (hub-free graphs): remap neighbors to state-array
-    // positions once; per round broadcast ONE bare double[] — pre-divided
-    // rank/deg when unweighted (kernel: one read per edge), rank alone when
-    // weighted (strength array broadcast once). Hash path kept for hub
-    // graphs and the scaling A/B (Config.indexedState).
-    val useIdx = cfg.indexedState && packed.maxSegs == 1
     val qR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
     val degArrROpt =
-      if (useIdx && cfg.weighted) Some(new StateMap.Ref(sc.broadcast(degs.clone())))
-      else None
-    val degR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongDoubleMap]](
-      if (useIdx) null else sc.broadcast(StateMap.longDouble(ids, degs, n)))
-    val rankR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongDoubleMap]](null)
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        // shared packs stay cached for the caller's other algorithms
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    val iterDf = pidxOpt match {
-      case Some(pidx) => iterPlanPackedIdx(pidx, qR, degArrROpt, v, cfg, emitPos = true)
-      case None       => iterPlanPacked(packed, rankR, degR, v, cfg)
-    }
-    // Indexed path: V rows come back per iteration — collect them as
-    // per-partition PRIMITIVE (position, rank) arrays straight off the
-    // codegen'd InternalRow iterator instead of boxed Rows (the Row
-    // decode is driver-serial and does not shrink with cluster size).
-    // Built once; each collect() re-serializes the closure so the
-    // Ref-carried broadcast handles are fresh per round.
-    val fastRdd =
-      if (useIdx) Some(iterDf.queryExecution.toRdd.mapPartitions { it =>
+      if (cfg.weighted) Some(new StateMap.Ref(sc.broadcast(degs.clone()))) else None
+    // V rows come back per iteration — collected as per-partition
+    // PRIMITIVE (position, rank) arrays straight off the codegen'd
+    // InternalRow iterator instead of boxed Rows (the Row decode is
+    // driver-serial and does not shrink with cluster size). Built once;
+    // each collect() re-serializes the closure so the Ref-carried
+    // broadcast handles are fresh per round.
+    val rankRdd = iterPlanPackedIdx(pidx, qR, degArrROpt, v, cfg)
+      .queryExecution.toRdd.mapPartitions { it =>
         val pb = new scala.collection.mutable.ArrayBuilder.ofInt
         val rb = new scala.collection.mutable.ArrayBuilder.ofDouble
         while (it.hasNext) {
@@ -331,8 +263,7 @@ object PageRank {
           pb += r.getInt(0); rb += r.getDouble(1)
         }
         Iterator.single((pb.result(), rb.result()))
-      })
-      else None
+      }
     var ranks = Array.fill(n)(1.0 / v)
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
     val timing = sys.env.get("SPARK_GRAFT_STEP_TIMING").exists(_.toBoolean)
@@ -340,55 +271,36 @@ object PageRank {
     var done = false
     while (!done && iter < nIter) {
       val t0 = System.nanoTime()
-      if (useIdx) {
-        val q =
-          if (cfg.weighted) ranks.clone()
-          else {
-            // same IEEE division the hash kernel did per edge — bitwise-
-            // identical contributions, computed once per vertex instead.
-            val a = new Array[Double](n)
-            var z = 0
-            while (z < n) { a(z) = ranks(z) / degs(z); z += 1 }
-            a
-          }
-        qR.value = sc.broadcast(q)
-      } else rankR.value = sc.broadcast(StateMap.longDouble(ids, ranks, n))
+      val q =
+        if (cfg.weighted) ranks.clone()
+        else {
+          // one IEEE division per vertex, not per edge — the same
+          // contribution value every in-neighbor reads.
+          val a = new Array[Double](n)
+          var z = 0
+          while (z < n) { a(z) = ranks(z) / degs(z); z += 1 }
+          a
+        }
+      qR.value = sc.broadcast(q)
       val tLocal = System.nanoTime()
       val next = ranks.clone() // min-degree-1: every vertex receives a row
       var delta = 0.0
       var nRows = 0L
-      var tJob = 0L
-      fastRdd match {
-        case Some(rdd) =>
-          val parts = rdd.collect()
-          qR.value.destroy()
-          tJob = System.nanoTime()
-          var p = 0
-          while (p < parts.length) {
-            val (pos, rs) = parts(p)
-            nRows += pos.length
-            var k = 0
-            while (k < pos.length) {
-              val at = pos(k)
-              delta += math.abs(rs(k) - ranks(at))
-              next(at) = rs(k)
-              k += 1
-            }
-            p += 1
-          }
-        case None =>
-          val rows = iterDf.collect()
-          rankR.value.destroy()
-          tJob = System.nanoTime()
-          nRows = rows.length
-          var k = 0
-          while (k < rows.length) {
-            val at = idx(rows(k).getLong(0))
-            val nr = rows(k).getDouble(1)
-            delta += math.abs(nr - ranks(at))
-            next(at) = nr
-            k += 1
-          }
+      val parts = rankRdd.collect()
+      qR.value.destroy()
+      val tJob = System.nanoTime()
+      var p = 0
+      while (p < parts.length) {
+        val (pos, rs) = parts(p)
+        nRows += pos.length
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          delta += math.abs(rs(k) - ranks(at))
+          next(at) = rs(k)
+          k += 1
+        }
+        p += 1
       }
       ranks = next
       if (timing) System.err.println(
@@ -399,10 +311,9 @@ object PageRank {
       iterMs += (System.nanoTime() - t0) / 1000000
       iter += 1
     }
-    if (degR.value != null) degR.value.destroy()
     degArrROpt.foreach(_.value.destroy())
-    pidxOpt.foreach(_.unpersist())
-    ((0 until n).map(k => (ids(k), ranks(k))).toDF("id", "rank"), iterMs.toSeq)
+    pidx.unpersist()
+    Some(((0 until n).map(k => (ids(k), ranks(k))).toDF("id", "rank"), iterMs.toSeq))
   }
 
   /** One co-partitioned-shuffle iteration's (unpinned) next-state plan —
@@ -458,50 +369,27 @@ object PageRank {
       .select(col("id"), newRank.as("rank"))
   }
 
-  /** CSR-packed iteration plan (the production broadcast-state path): a
-    * V-row scan of the packed in-neighbor lists where a codegen'd kernel
-    * (PackedKernels.prContrib) sums rank(u)/deg(u) over each vertex's
-    * in-neighbors in one pass — no aggregate operator at all unless the
-    * build saw hub vertices (maxSegs > 1), in which case per-segment
-    * partial sums are combined by a regular V-row aggregate. Same per-
-    * contribution arithmetic as iterPlan/iterPlanMap; per-vertex
+  /** Dense-index iteration plan (the broadcast-state loop's plan, hub-free
+    * graphs): a V-row scan of the reindexed in-neighbor lists where a
+    * codegen'd kernel (PackedKernels.kContribIdx) sums each vertex's
+    * contributions in one pass — no aggregate operator. Same
+    * per-contribution arithmetic as iterPlan/iterPlanMap; per-vertex
     * accumulation order is the sorted neighbor array (deterministic across
-    * runs). */
-  private[graft] def iterPlanPacked(packed: graft.graph.PackedAdj,
-      rankOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongDoubleMap]],
-      degOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongDoubleMap]],
+    * runs). Rows are keyed by the dense state POSITION (myIdx): the driver
+    * merge needs no id -> index probe. */
+  private[graft] def iterPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
+      qR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]],
+      degArrR: Option[graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]]],
       v: Double, cfg: Config): DataFrame = {
     val newRank =
       lit((1.0 - cfg.damping) / v) +
         lit(cfg.damping) * (coalesce(col("s"), lit(0.0)) + lit(0.0))
-    val wcol = if (packed.weighted) Some(col("wts")) else None
-    val contrib = packed.df
-      .select(col("id"), PackedKernels.prContrib(col("nbrs"), wcol, rankOf, degOf).as("c"))
-      .filter(col("c").isNotNull)
-    val s =
-      if (packed.maxSegs > 1) contrib.groupBy("id").agg(sum("c").as("s"))
-      else contrib.withColumnRenamed("c", "s")
-    s.select(col("id"), newRank.as("rank"))
-  }
-
-  /** Dense-index iteration plan (hub-free production path; see
-    * PackedKernels.kContribIdx). No hub branch — reindex requires
-    * maxSegs == 1. */
-  private[graft] def iterPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
-      qR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]],
-      degArrR: Option[graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]]],
-      v: Double, cfg: Config, emitPos: Boolean = false): DataFrame = {
-    val newRank =
-      lit((1.0 - cfg.damping) / v) +
-        lit(cfg.damping) * (coalesce(col("s"), lit(0.0)) + lit(0.0))
     val wcol = if (pidx.weighted) Some(col("wts")) else None
-    // emitPos: the driver-state loop keys its merge on the dense state
-    // POSITION (myIdx) — no id->index probe, primitive-array collect.
     pidx.df
       .select(col("id"), col("myIdx"),
         PackedKernels.prContribIdx(col("nbrs"), wcol, qR, degArrR).as("s"))
       .filter(col("s").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"), newRank.as("rank"))
+      .select(col("myIdx"), newRank.as("rank"))
   }
 
   /** Top-k vertices by rank (SURVEY.md §2.6 addition). */

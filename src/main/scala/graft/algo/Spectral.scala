@@ -173,16 +173,19 @@ object Spectral {
     val nL = degAgg.count()
     if (nL <= broadcastStateMaxRows) {
       val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
-        deferCacheIfHubFree = true,
+        deferCache = true,
         degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
-      if (packed.maxSegs == 1) {
+      // ids/degrees/x0 in one collect (hub-free packs only); x0 evaluated
+      // by the SAME column expression the DataFrame path uses.
+      lazy val rows = degAgg.select(col("id"), col("d").cast("double").as("deg"),
+        Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")).collect()
+      val pidxOpt = graft.graph.PackedAdjacency.indexed(packed,
+        rows.map(_.getLong(0)), owned = true)
+      if (pidxOpt.isDefined) {
         import graft.util.StateMap
         val sc = spark.sparkContext
+        val pidx = pidxOpt.get
         val n = nL.toInt
-        // ids/degrees/x0 in one collect; x0 evaluated by the SAME column
-        // expression the DataFrame path uses.
-        val rows = degAgg.select(col("id"), col("d").cast("double").as("deg"),
-          Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")).collect()
         val ids = new Array[Long](n)
         val degs = new Array[Double](n)
         var x = new Array[Double](n)
@@ -196,10 +199,6 @@ object Spectral {
           i += 1
         }
         val sigma = 3.0 * dmax + 1.0
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        packed.unpersist()
         val xR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
         val sumDf = pidx.df.select(col("myIdx"),
           GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y"))
@@ -252,7 +251,6 @@ object Spectral {
           org.apache.spark.sql.types.StructField("x",
             org.apache.spark.sql.types.DoubleType, nullable = false))))
       }
-      packed.unpersist()
     }
     degAgg.unpersist()
     val sym = GraphOps.pinnedSym(edges, "dst")

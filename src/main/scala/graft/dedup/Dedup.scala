@@ -136,7 +136,9 @@ object Dedup {
   }
 
   /** Pre-pin computation of jaccardPairs, exposed for plan evidence
-    * (PlanDump6 — the pinned public frame explains as a bare RDD scan).
+    * (`plans/r06/q_jaccard_pairs_internal_*.txt`, OPTIMIZATION_r06.md
+    * "Set-similarity joins" — the pinned public frame explains as a bare
+    * RDD scan).
     * Returns (pairs, ranked shingle cache); the CALLER owns the cache. */
   private[graft] def jaccardPairsFrame(docs: DataFrame, threshold: Double, n: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text",

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** CSR-packed adjacency cache + hub segmentation metadata (see
   * PackedAdjacency.build). `maxSegs == 1` means no vertex exceeded the
-  * segment cap, so plan builders can skip the hub-combine branch
-  * entirely. Caller owns the cache lifetime (unpersist()). */
+  * segment cap — the only kind of pack the index kernels run on (see
+  * PackedAdjacency.indexed). Caller owns the cache lifetime (unpersist()). */
 final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
                            degSum: Long = 0L) {
   def unpersist(): Unit = { df.unpersist(); () }
@@ -19,8 +19,9 @@ final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
   * direct 8-byte load per neighbor instead of ~2 random hash-probe cache
   * lines — and the per-round broadcast shrinks to the values array alone
   * (8 B/vertex vs the ~32 B/vertex open-addressing map). Int neighbor
-  * arrays also halve the cached adjacency's sequential footprint. */
-final case class PackedIdxAdj(df: DataFrame, weighted: Boolean) {
+  * arrays also halve the cached adjacency's sequential footprint.
+  * `degSum` is the source pack's directed half-edge count. */
+final case class PackedIdxAdj(df: DataFrame, weighted: Boolean, degSum: Long = 0L) {
   def unpersist(): Unit = { df.unpersist(); () }
 }
 
@@ -48,9 +49,12 @@ final case class PackedIdxAdj(df: DataFrame, weighted: Boolean) {
   * xxhash64(neighbor) % nsegs, so no single row exceeds ~segCap elements
   * (8 MB of longs at the default 1<<20) — the bounded-row answer to the
   * collect_set hub bomb this engine already purged from connected
-  * components. Per-vertex decisions for multi-segment vertices flow
-  * through a partial-counts + regular-aggregate branch in the plan
-  * builders; `maxSegs` tells them whether that branch can be elided.
+  * components. There is ONE superstep kernel per algorithm, and it runs
+  * on the dense-index remap of a hub-free pack (`indexed`); a graph with
+  * a segmented vertex (`maxSegs > 1`) takes its algorithm's co-partitioned
+  * shuffle loop instead. build() learns `maxSegs` from the V-row degree
+  * aggregate before anything is cached, so that fallback costs only the
+  * aggregate, never the E-row sort.
   *
   * Arrays are sorted (array_sort) so per-vertex float accumulation order —
   * and therefore every kernel output — is deterministic across runs and
@@ -77,15 +81,15 @@ object PackedAdjacency {
     * segment. This is the classic distributed CSR build; the in-partition
     * sort also hands every kernel a sorted neighbor array for free
     * (deterministic float accumulation order). */
-  /** `deferCacheIfHubFree`: when true AND the graph turns out hub-free
-    * (maxSegs == 1), the LONG-id packed table is NOT persisted — the caller
-    * promises to `reindex` immediately, and reindex's single scan both
-    * materializes the pack lineage and caches the INT-position table (half
-    * the footprint). Measured necessity: at 1.67e9 pre-assembly rows on
-    * 2x12 GB executors, caching the long-array table (13.4 GB) while the
-    * pack sort runs drove execution memory to zero; the int table (6.7 GB)
-    * fits. Hub graphs (maxSegs > 1) always cache, since the hash-kernel
-    * plans scan the long-id table every superstep. */
+  /** Caching: a hub pack (maxSegs > 1) is never persisted — no kernel
+    * reads one. A hub-free pack is persisted unless `deferCache`: the
+    * caller then promises to `reindex` it right away (see `indexed`), and
+    * reindex's single scan both materializes the pack lineage and caches
+    * the INT-position table (half the footprint). Measured necessity: at
+    * 1.67e9 pre-assembly rows on 2x12 GB executors, caching the long-array
+    * table (13.4 GB) while the pack sort runs drove execution memory to
+    * zero; the int table (6.7 GB) fits. Callers that share one pack across
+    * several algorithms leave it persisted. */
   /** `partitions`: pack-shuffle output count (defaults to the session's
     * shuffle partitions). This sizes the SORT tasks — keep it data-sized;
     * shrinking it to per-core counts made each in-partition sort huge and
@@ -108,7 +112,7 @@ object PackedAdjacency {
     * strategy decision / rank-degree table) pass it so the build does not
     * re-aggregate the E-row input. */
   def build(sym: DataFrame, key: String, weighted: Boolean = false,
-            segCap: Int = 1 << 20, deferCacheIfHubFree: Boolean = false,
+            segCap: Int = 1 << 20, deferCache: Boolean = false,
             partitions: Option[Int] = None,
             cachePartitions: Option[Int] = None,
             degOpt: Option[DataFrame] = None): PackedAdj = {
@@ -119,8 +123,8 @@ object PackedAdjacency {
     // Stats come from the V-row degree frame, NOT from scanning the packed
     // table afterwards (the old count()+max(nsegs) pair forced two full
     // materializations of the pack): degSum = directed half-edge count
-    // (2E on a symmetrized input), maxSegs decides the hub branch before
-    // any caching policy is applied.
+    // (2E on a symmetrized input), maxSegs decides the caching policy
+    // before anything is materialized.
     val st = degAgg.agg(
       sum(col("d")),
       max(ceil(col("d") / lit(segCap.toDouble)).cast("int"))).collect()(0)
@@ -188,20 +192,42 @@ object PackedAdjacency {
         }.toDF("id", "nsegs", "nbrs")
     val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
     val packed =
-      if (deferCacheIfHubFree && maxSegs == 1) packed1
+      if (deferCache || maxSegs > 1) packed1
       else { val p = packed1.persist(); p.count(); p }
     PackedAdj(packed, maxSegs, weighted, degSum)
+  }
+
+  /** The entry to the index kernels, shared by every broadcast-state loop:
+    * remap `packed` to dense positions of `ids` (see reindex) and release
+    * what the remap replaces — the id -> position broadcast and, when
+    * `owned`, the id-keyed pack (a shared pack stays cached for the
+    * caller's other algorithms). None for a hub graph (maxSegs > 1): no
+    * index plan exists for it, so the caller runs its shuffle loop. `ids`
+    * is evaluated only for a hub-free pack. */
+  def indexed(packed: PackedAdj, ids: => Array[Long], owned: Boolean): Option[PackedIdxAdj] = {
+    if (packed.maxSegs > 1) return None
+    val sc = packed.df.sparkSession.sparkContext
+    val at = ids
+    val n = at.length
+    val idxB = sc.broadcast(
+      graft.util.StateMap.longLong(at, Array.tabulate(n)(_.toLong), n))
+    val pidx = reindex(packed, idxB)
+    // unpersist, not destroy: a lost cache partition re-runs the remap
+    // lineage, which still needs the broadcast re-shippable.
+    idxB.unpersist()
+    if (owned) packed.unpersist()
+    Some(pidx)
   }
 
   /** Remap a hub-free (`maxSegs == 1`) packed adjacency to dense state
     * indexes (see PackedIdxAdj). `idxB` maps vertex id -> position in the
     * caller's state arrays; ids outside it become -1 (the kernels' skip,
-    * mirroring the hash kernels' slot<0). One in-memory scan of the
-    * already-cached packed table, amortized over all supersteps like the
-    * build itself; the caller releases the id-based cache afterwards.
+    * mirroring the row plans' join drop). One scan of the packed table,
+    * amortized over all supersteps like the build itself; the caller
+    * releases the id-based cache afterwards.
     * Neighbor order (sorted by original id) is PRESERVED, so per-vertex
     * float accumulation order — and every kernel decision — is unchanged. */
-  def reindex(packed: PackedAdj,
+  private def reindex(packed: PackedAdj,
       idxB: org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap])
       : PackedIdxAdj = {
     require(packed.maxSegs == 1,
@@ -239,7 +265,7 @@ object PackedAdjacency {
           }.toDF("id", "myIdx", "nbrs")
     val p = out.persist()
     p.count()
-    PackedIdxAdj(p, packed.weighted)
+    PackedIdxAdj(p, packed.weighted, packed.degSum)
   }
 }
 

@@ -148,6 +148,37 @@ object StateMap {
     longLong(ids, vs, j)
   }
 
+  /** Two-column driver state from collected (id, value) rows: ids and
+    * values as parallel primitive arrays, in row order. */
+  def columns(rows: Array[org.apache.spark.sql.Row]): (Array[Long], Array[Long]) = {
+    val ids = new Array[Long](rows.length)
+    val vals = new Array[Long](rows.length)
+    var i = 0
+    while (i < rows.length) { ids(i) = rows(i).getLong(0); vals(i) = rows(i).getLong(1); i += 1 }
+    (ids, vals)
+  }
+
+  /** Driver arrays back into a non-null (id, `name`) frame. NOT a
+    * LocalRelation (ADVICE r3): `(0..n).toDF` serializes V rows into the
+    * plan on every use — a large driver allocation near the 4M-row budget,
+    * and joining edges against a V-row LocalRelation re-introduces the
+    * broadcast-build job StateMap exists to avoid. Parallelized indices
+    * instead: the arrays cross once per job in the torrent-broadcast
+    * taskBinary, rows materialize in executors, and the resulting
+    * LogicalRDD has no stats — so a downstream edge join never tries to
+    * broadcast-build the state side. */
+  def frame(spark: org.apache.spark.sql.SparkSession, ids: Array[Long], name: String,
+            values: Array[Long]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val n = ids.length
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 65536 + 1))
+    val rdd = spark.sparkContext.parallelize(0 until n, slices)
+      .map(k => org.apache.spark.sql.Row(ids(k), values(k)))
+    spark.createDataFrame(rdd, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField(name, LongType, nullable = false))))
+  }
+
   private[graft] val refCls = classOf[Ref[_]].getName
 
   /** NULL when the key is absent or the child is null — mirrors the row

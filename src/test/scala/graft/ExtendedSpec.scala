@@ -61,6 +61,20 @@ class HedonicFrontierSpec extends SparkSpec {
     assert(fracF >= 0.9, s"frontier equilibrium fraction $fracF")
   }
 
+  test("frontier executor: broadcast-state run equals the shuffle run") {
+    // guards the broadcast-state loop's DeltaState transport: members AND
+    // the per-superstep (moved, frontier) trace must match the DataFrame
+    // loop exactly
+    val e = edgesOf(Fixtures.zachary)
+    val init = GraphOps.vertices(e).select(col("id"), (col("id") % 4).as("community"))
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (mB, metB) = HedonicFrontier.run(e, init, cfg)
+    val (mS, metS) = HedonicFrontier.run(e, init, cfg.copy(broadcastStateMaxRows = 0L))
+    assert(toMap(mB) == toMap(mS))
+    assert(metB.map(m => (m.superstep, m.moved, m.frontier)) ==
+      metS.map(m => (m.superstep, m.moved, m.frontier)))
+  }
+
   test("frontier executor is deterministic (kite)") {
     val e = edgesOf(Fixtures.kite)
     val init = GraphOps.vertices(e).select(col("id"), (col("id") % 3).as("community"))

@@ -4,11 +4,13 @@ import graft.algo.{Hedonic, LabelPropagation, PageRank}
 import graft.graph.{GraphOps, PackedAdjacency}
 
 /** Pack-once, run-many: a caller-built CSR pack of the symmetrized edges is
-  * honored by Hedonic.run and PageRank.runTimed on the broadcast-state path
-  * (src- and dst-packs of a symmetric edge set are identical), with results
-  * bitwise equal to each algorithm building its own pack, and the CACHE
-  * LIFETIME owned by the caller — the runs must neither unpersist the
-  * shared pack mid-pipeline nor leak their own reindexed caches. */
+  * honored by Hedonic.run, PageRank.runTimed and LabelPropagation.run on
+  * the broadcast-state path (src- and dst-packs of a symmetric edge set
+  * are identical), with results bitwise equal to each algorithm building
+  * its own pack, and the CACHE LIFETIME owned by the caller — the runs
+  * must neither unpersist the shared pack mid-pipeline nor leak their own
+  * reindexed caches. A hub pack has no index plan: its runs take the
+  * shuffle loop. */
 class SharedPackSpec extends SparkSpec {
 
   private val pairs = Seq[(Long, Long)](
@@ -78,6 +80,40 @@ class SharedPackSpec extends SparkSpec {
     pack.unpersist()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"persistent RDDs leaked: $leaked")
+  }
+
+  test("a shared hub pack sends every algorithm to its shuffle loop") {
+    // segCap = 2 segments every vertex of degree > 2: a hub pack, which has
+    // no index plan. Each run must then equal its broadcastStateMaxRows = 0
+    // run, and neither the pack nor a remap of it may stay cached: all the
+    // runs may leave persisted is the shuffle loops' state pins (local
+    // checkpoints the caller owns).
+    val e = edgesOf(pairs)
+    val init = membersOf((0L to 7L).map(i => (i, i)))
+    val cfgH = Hedonic.Config(maxSupersteps = 40)
+    val cfgP = PageRank.Config(fixedIter = Some(20))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (shufH, shufMet) = Hedonic.run(e, init, cfgH.copy(broadcastStateMaxRows = 0L))
+    val shufP = ranks(PageRank.run(e, cfgP.copy(broadcastStateMaxRows = 0L)))
+    val shufL = toMap(LabelPropagation.run(e, broadcastStateMaxRows = 0L))
+
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pack = PackedAdjacency.build(
+      GraphOps.symmetrize(e).select("src", "dst"), "src", segCap = 2)
+    assert(pack.maxSegs > 1)
+    assert(!pack.df.storageLevel.useMemory, "a hub pack must not be cached")
+    val (hubH, hubMet) = Hedonic.run(e, init, cfgH, packedOpt = Some(pack))
+    val (hubPdf, _) = PageRank.runTimed(e, cfgP, None, packedOpt = Some(pack))
+    val hubL = toMap(LabelPropagation.run(e, packedOpt = Some(pack)))
+    assert(toMap(hubH) == toMap(shufH))
+    assert(hubMet.map(m => (m.superstep, m.moved, m.frontier)) ==
+      shufMet.map(m => (m.superstep, m.moved, m.frontier)))
+    assert(ranks(hubPdf) == shufP)
+    assert(hubL == shufL)
+    val caches = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
+    assert(caches.isEmpty, s"hub runs left caches behind: ${caches.values}")
   }
 
   test("mismatched weighted flag on a prebuilt pack is rejected") {

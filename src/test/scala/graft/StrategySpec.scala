@@ -179,93 +179,77 @@ class StrategySpec extends SparkSpec {
     assert(b == s)
   }
 
-  // --- dense-index vs hash-probe kernel A/B (PackedAdjacency.reindex) ---
-  // indexedState toggles ONLY the state representation (bare values array
-  // through int position arrays vs broadcast hash maps); the shared kernel
-  // tails must make every decision — and every per-superstep counter —
-  // identical, unweighted and weighted.
+  // --- budget gates at Long.MaxValue: every gate compares the capped
+  // collect against the CLAMPED cap (Int.MaxValue - 2), so an unbounded
+  // budget takes the driver path on the full input, never on a truncated
+  // collect, and decides exactly as the default budget does.
+  private val unbounded = Long.MaxValue
 
-  test("hedonic: indexed and hash packed kernels decide identically") {
+  test("budget Long.MaxValue: Hedonic.run matches the default budget") {
     val e = edgesOf(pairs)
-    val init = membersOf(Seq((0L, 5L), (1L, 0L), (2L, 0L), (3L, 1L),
-      (4L, 1L), (5L, 0L), (6L, 1L), (7L, 5L)))
-    val cfg = Hedonic.Config(maxSupersteps = 40)
-    val (mI, metI) = Hedonic.run(e, init, cfg)
-    val (mH, metH) = Hedonic.run(e, init, cfg.copy(indexedState = false))
-    assert(toMap(mI) == toMap(mH))
-    assert(metI.map(m => (m.superstep, m.moved, m.frontier)) ==
-      metH.map(m => (m.superstep, m.moved, m.frontier)))
-  }
-
-  test("hedonic: WEIGHTED indexed and hash packed kernels agree") {
-    import spark.implicits._
-    val wedges = pairs.map { case (u, v) =>
-      graft.model.Edge(u, v, ((u * 3 + v) % 4 + 1).toDouble)
-    }.toDS()
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
-    val cfg = Hedonic.Config(maxSupersteps = 40, weighted = true)
-    val (mI, _) = Hedonic.run(wedges, init, cfg)
-    val (mH, _) = Hedonic.run(wedges, init, cfg.copy(indexedState = false))
-    assert(toMap(mI) == toMap(mH))
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (mD, metD) = Hedonic.run(e, init, cfg)
+    val (mU, metU) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = unbounded))
+    assert(toMap(mU) == toMap(mD))
+    assert(metU.map(m => (m.superstep, m.moved, m.frontier)) ==
+      metD.map(m => (m.superstep, m.moved, m.frontier)))
   }
 
-  test("pagerank: indexed (pre-divided) and hash kernels agree bitwise") {
-    val e = edgesOf(Fixtures.zachary)
-    val cfg = PageRank.Config(fixedIter = Some(20))
-    val i = PageRank.run(e, cfg)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.run(e, cfg.copy(indexedState = false))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // Same divisions, same neighbor order: EXACT equality, not allclose.
-    assert(i == h)
-  }
-
-  test("pagerank: WEIGHTED indexed and hash kernels agree bitwise") {
-    import spark.implicits._
-    val wedges = Fixtures.zachary.map { case (u, v) =>
-      graft.model.Edge(u, v, ((u + 2 * v) % 5 + 1).toDouble)
-    }.toDS()
-    val cfg = PageRank.Config(fixedIter = Some(20), weighted = true)
-    val i = PageRank.run(wedges, cfg)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.run(wedges, cfg.copy(indexedState = false))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(i == h)
-  }
-
-  test("lpa: indexed and hash packed kernels produce identical labels") {
+  test("budget Long.MaxValue: HedonicFrontier.run matches the default budget") {
     val e = edgesOf(pairs)
-    val i = toMap(LabelPropagation.run(e))
-    val h = toMap(LabelPropagation.run(e, indexedState = false))
-    assert(i == h)
-    val iw = toMap(LabelPropagation.run(e, weighted = true))
-    val hw = toMap(LabelPropagation.run(e, weighted = true, indexedState = false))
-    assert(iw == hw)
+    val init = membersOf((0L to 7L).map(i => (i, i % 3)))
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (mD, _) = graft.algo.HedonicFrontier.run(e, init, cfg)
+    val (mU, _) = graft.algo.HedonicFrontier.run(e, init,
+      cfg.copy(broadcastStateMaxRows = unbounded))
+    assert(toMap(mU) == toMap(mD))
+  }
+
+  test("budget Long.MaxValue: LabelPropagation.run matches the default budget") {
+    val e = edgesOf(pairs)
+    assert(toMap(LabelPropagation.run(e, broadcastStateMaxRows = unbounded)) ==
+      toMap(LabelPropagation.run(e)))
+  }
+
+  test("budget Long.MaxValue: LabelPropagation.bestLabels matches the default budget") {
+    val e = edgesOf(pairs)
+    val labels = graft.graph.GraphOps.vertices(e)
+      .select(col("id"), (col("id") % 3).as("label"))
+    val symP = graft.graph.GraphOps.symmetrize(e).select("src", "dst")
+    assert(toMap(LabelPropagation.bestLabels(symP, labels, broadcastStateMaxRows = unbounded)) ==
+      toMap(LabelPropagation.bestLabels(symP, labels)))
+  }
+
+  test("budget Long.MaxValue: ConnectedComponents.run matches the default budget") {
+    val e = edgesOf(pairs ++ Seq[(Long, Long)]((10, 11), (11, 12)))
+    assert(toMap(graft.algo.ConnectedComponents.run(e, maxDriverEdges = unbounded)) ==
+      toMap(graft.algo.ConnectedComponents.run(e)))
   }
 
   test("indexed superstep plans contain zero spine shuffle exchanges") {
     import graft.graph.{GraphOps, PackedAdjacency}
-    import graft.util.StateMap
+    import graft.util.{DeltaState, StateMap}
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val e = edgesOf(pairs)
       val sc = spark.sparkContext
       val ids = (0L to 7L).toArray
-      val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(8)(_.toLong), 8))
-      val packed = PackedAdjacency.build(
-        GraphOps.symmetrize(e).select("src", "dst"), "src")
-      val pidx = PackedAdjacency.reindex(packed, idxB)
-      val commArrB = new StateMap.Ref(sc.broadcast(ids.clone()))
-      val sizeB = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, Array.fill(8)(1L), 8)))
-      val hplan = Hedonic.stepPlanPackedIdx(pidx, commArrB, sizeB, 0.25, lit(true))
+      val pidx = PackedAdjacency.indexed(PackedAdjacency.build(
+        GraphOps.symmetrize(e).select("src", "dst"), "src", deferCache = true),
+        ids, owned = true).get
+      val state = new DeltaState.DriverState(sc, ids.clone(), withSizes = true)
+      state.publish(0)
+      val hplan = Hedonic.stepPlanPackedIdxDelta(pidx, state.state, 0.25, lit(true))
       assert(spineShuffles(hplan) == 0, hplan.queryExecution.executedPlan.toString)
       val qB = new StateMap.Ref(sc.broadcast(Array.fill(8)(0.125)))
       val pplan = PageRank.iterPlanPackedIdx(pidx, qB, None, 8.0, PageRank.Config())
       assert(spineShuffles(pplan) == 0, pplan.queryExecution.executedPlan.toString)
-      val lplan = LabelPropagation.stepPlanPackedIdx(pidx, commArrB, lit(true))
+      val lplan = LabelPropagation.stepPlanPackedIdxDelta(pidx, state.state, lit(true))
       assert(spineShuffles(lplan) == 0, lplan.queryExecution.executedPlan.toString)
-      pidx.unpersist(); packed.unpersist()
+      state.release(); state.close()
+      pidx.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

@@ -70,8 +70,7 @@ object Explain {
       val ids = (0L to 3L).toArray
       val sc = spark.sparkContext
       val pidx = graft.graph.PackedAdjacency.indexed(
-        graft.graph.PackedAdjacency.build(symDf, "src", deferCache = true),
-        ids, owned = true).get
+        graft.graph.PackedAdjacency.build(symDf, "src"), ids).get
       val qR = new StateMap.Ref(sc.broadcast(Array.fill(4)(0.125)))
       val dBase = sc.broadcast(new DeltaState.FullState(
         ids.clone(), ids.clone(), Array.fill(4)(1L)))

@@ -200,7 +200,7 @@ object ScalingBench {
       if (sharePack) Some(graft.graph.PackedAdjacency.build(
         GraphOps.symmetrize(edges).select("src", "dst"), "src",
         weighted = false, partitions = Some(packParts),
-        cachePartitions = Some(cacheParts)))
+        cachePartitions = Some(cacheParts)).cached())
       else None
     val tPackShared = if (sharePack) (System.nanoTime() - tPack0) / 1e9 else 0.0
 

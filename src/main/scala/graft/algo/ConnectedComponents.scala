@@ -71,18 +71,15 @@ object ConnectedComponents {
     // exchanges + pin + convergence check, x O(log^2 V) rounds) dwarfs
     // the actual work on small inputs — dedupSurvivors' pair graphs and
     // Leiden.refine's intra-community slices are tiny by construction at
-    // any corpus scale. limit(cap+1) keeps an over-budget table off the
-    // driver (the capped collect just signals "too big"); larger inputs
-    // run the large/small-star loop below unchanged, so the 100 TB path
-    // is exactly the code it was. Labels are identical by construction:
+    // any corpus scale. The capped collect (StateMap.withinBudget) keeps
+    // an over-budget table off the driver; larger inputs run the
+    // large/small-star loop below unchanged, so the 100 TB path is
+    // exactly the code it was. Labels are identical by construction:
     // union-by-minimum keeps every union-find root the component minimum,
     // the same canonical comp = min(component) the star loop converges
     // to (AlgoSpec pins both paths against runNaive).
-    val cap = math.min(maxDriverEdges, Int.MaxValue - 2L).toInt
-    val eCap = edges.select(col("src"), col("dst")).limit(cap + 1).collect()
-    // against the CLAMPED cap: a budget past Int.MaxValue - 2 would
-    // otherwise pass a truncated collect
-    if (eCap.length <= cap) return runDriver(edges.sparkSession, eCap)
+    val small = graft.util.StateMap.withinBudget(edges.select(col("src"), col("dst")), maxDriverEdges)
+    if (small.isDefined) return runDriver(edges.sparkSession, small.get)
     // Per round: pin + cache-count (pinCount, InternalRow cache — no
     // row boxing) + the union-distinct job only when the counts already
     // agree; the previous round's count carries forward (the old loop

@@ -54,8 +54,8 @@ import graft.io.{Checkpoint, Iterate}
   *    gather+score+argmax in one pass (PackedAdjacency / PackedKernels /
   *    stepPlanPackedIdxDelta) and a wanter-row collect at the end. Nothing
   *    is pinned; wants/moved are counted on the collected rows. A graph
-  *    with a hub vertex (a segmented pack, see PackedAdjacency) has no
-  *    index plan and takes the shuffle loop below.
+  *    with a hub vertex (PackedAdj.hub) has no index plan and takes the
+  *    shuffle loop below.
   *  - Co-partitioned shuffle (the 1e9-vertex path): the new state is
   *    pinned (eager cache + RDD-lineage cut + stats barrier, see
   *    graft.io.Iterate) while the wants/moved counters ride the same pass
@@ -401,9 +401,9 @@ object Hedonic {
     * identical), honored on the broadcast-state path. A pipeline running
     * several algorithms on one graph packs ONCE and shares it — the pack's
     * E-row shuffle+sort is the dominant one-time cost at every scale and
-    * there is no reason to pay it per algorithm. The caller owns the
-    * cache lifetime (run() will not unpersist a prebuilt pack); its
-    * `weighted` flag must match cfg.weighted. */
+    * there is no reason to pay it per algorithm. The caller persists the
+    * pack and owns its cache lifetime (PackedAdj.cached; run() never
+    * unpersists it); its `weighted` flag must match cfg.weighted. */
   def run(
       edges: Dataset[Edge],
       init: DataFrame,
@@ -428,49 +428,36 @@ object Hedonic {
       case None          => (0, init.select("id", "community"))
     }
 
-    // ONE materialization decides the strategy AND (when within budget)
-    // already IS the driver-state collect (round 6; the old shape ran a
-    // separate count() job and then re-materialized the state inside
-    // runDriverState). limit(budget+1) keeps an over-budget state off the
-    // driver: the capped collect then just signals "too big" and the
-    // shuffle path recomputes from the frame. The length test is against
-    // the CLAMPED cap: a budget past Int.MaxValue - 2 would otherwise pass
-    // a truncated collect.
-    val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val startCap = startMembers.select("id", "community").limit(cap + 1).collect()
-
-    if (startCap.length <= cap) {
-      // ONE-superstep fast path (round 6): a single superstep never
-      // amortizes the CSR pack build (exchange + sort + cache of the
-      // E-row adjacency), so the single-ungated-step queries
-      // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
-      // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
-      // (OPTIMIZATION_r06.md, "Hedonic one-superstep fast path").
-      // Decision-identical: StrategySpec pins it against the shuffle path,
-      // PackedSpec against the index kernel.
-      if (cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
-          ckpt.isEmpty && !cfg.trackPotential) {
-        val ve = veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))
-        return runMapOneShot(edges, startCap, startStep, a, 2 * ve._2, cfg)
-      }
-      // Broadcast-state strategy iterates over the dense-index CSR-packed
-      // adjacency (one build-time shuffle, then V-row supersteps — see
-      // PackedAdjacency / stepPlanPackedIdxDelta); a hub graph falls
-      // through to the shuffle loop.
-      packedOpt.foreach(p => require(p.weighted == cfg.weighted,
-        s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
-      val packed = packedOpt.getOrElse {
-        val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-        graft.graph.PackedAdjacency.build(
-          GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
-          weighted = cfg.weighted, deferCache = true,
-          partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
-      }
-      val (ids, comms) = graft.util.StateMap.columns(startCap)
-      graft.graph.PackedAdjacency.indexed(packed, ids, owned = packedOpt.isEmpty) match {
-        case Some(pidx) => return runDriverState(edges, pidx, ids, comms, startStep, a, cfg, ckpt)
-        case None       => ()
-      }
+    // ONE capped materialization decides the strategy AND (when within
+    // budget) already IS the driver-state collect (StateMap.withinBudget);
+    // over budget, the shuffle path recomputes from the frame.
+    graft.util.StateMap.withinBudget(startMembers.select("id", "community"),
+        cfg.broadcastStateMaxRows) match {
+      case Some(startRows) =>
+        // ONE-superstep fast path (round 6): a single superstep never
+        // amortizes the CSR pack build (exchange + sort + cache of the
+        // E-row adjacency), so the single-ungated-step queries
+        // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
+        // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
+        // (OPTIMIZATION_r06.md, "Hedonic one-superstep fast path").
+        // Decision-identical: StrategySpec pins it against the shuffle path,
+        // PackedSpec against the index kernel.
+        if (cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
+            ckpt.isEmpty && !cfg.trackPotential) {
+          val ve = veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))
+          return runMapOneShot(edges, startRows, startStep, a, 2 * ve._2, cfg)
+        }
+        // Broadcast-state strategy iterates over the dense-index CSR-packed
+        // adjacency (one build-time shuffle, then V-row supersteps — see
+        // PackedAdjacency / stepPlanPackedIdxDelta); a hub graph falls
+        // through to the shuffle loop.
+        val (ids, comms) = graft.util.StateMap.columns(startRows)
+        graft.graph.PackedAdjacency.indexedFor(edges, ids, cfg.weighted, packedOpt,
+            cfg.packPartitions, cfg.cachePartitions) match {
+          case Some(pidx) => return runDriverState(edges, pidx, ids, comms, startStep, a, cfg, ckpt)
+          case None       => ()
+        }
+      case None => ()
     }
 
     // Shuffle path (over budget, or a hub graph): cached pre-partitioned on
@@ -547,8 +534,7 @@ object Hedonic {
     val gate =
       if (cfg.parityGating) graft.util.Portable.parityGate(col("id"), startStep)
       else lit(true)
-    val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    val sym = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
+    val sym = GraphOps.symPairs(edges, cfg.weighted)
     val rows = stepPlanMap(sym, new StateMap.Ref(commB), new StateMap.Ref(sizeB),
       alpha, gate, cfg.weighted).collect()
     commB.destroy(); sizeB.destroy()

@@ -28,8 +28,11 @@ import graft.graph.GraphOps
   */
 object HedonicFrontier {
 
+  /** The frontier executor is unweighted: both of its loops count
+    * friends, so a weighted config is rejected. */
   def run(edges: Dataset[Edge], init: DataFrame,
           cfg: Hedonic.Config = Hedonic.Config()): (DataFrame, Seq[RunMetrics]) = {
+    require(!cfg.weighted, "HedonicFrontier.run is unweighted; cfg.weighted must be false")
     val a = cfg.alpha.getOrElse(GraphOps.density(edges))
     // Broadcast-state strategy (round 6): V within the broadcast budget and
     // hub-free — the frontier loop then runs as TWO single-stage jobs per
@@ -39,24 +42,17 @@ object HedonicFrontier {
     // jobs. Decision kernel, gate, and frontier-update rule are identical
     // (the same packed kernel the synchronous executor runs, PackedSpec-
     // pinned); only the physical strategy changes, exactly like
-    // Hedonic.run's own strategy split. The frontier executor is
-    // unweighted (cfg.weighted is ignored here as before).
-    if (!cfg.weighted) {
-      // one capped materialization = strategy decision + driver-state
-      // collect (see Hedonic.run, also for the clamped-cap comparison)
-      val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-      val initCap = init.select("id", "community").limit(cap + 1).collect()
-      if (initCap.length <= cap) {
-        val packed = graft.graph.PackedAdjacency.build(
-          GraphOps.symmetrize(edges).select("src", "dst"), "src",
-          weighted = false, deferCache = true,
-          partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
-        val (ids, comms) = graft.util.StateMap.columns(initCap)
-        graft.graph.PackedAdjacency.indexed(packed, ids, owned = true) match {
+    // Hedonic.run's own strategy split.
+    graft.util.StateMap.withinBudget(init.select("id", "community"),
+        cfg.broadcastStateMaxRows) match {
+      case Some(initRows) =>
+        val (ids, comms) = graft.util.StateMap.columns(initRows)
+        graft.graph.PackedAdjacency.indexedFor(edges, ids, weighted = false, None,
+            cfg.packPartitions, cfg.cachePartitions) match {
           case Some(pidx) => return runDriverState(edges, pidx, ids, comms, a, cfg)
           case None       => () // hub graph: fall through to the shuffle loop
         }
-      }
+      case None => ()
     }
     // cached pre-partitioned on src: the per-superstep frontier semi-join
     // (on src) reuses the cached layout; only the frontier side shuffles,

@@ -59,8 +59,8 @@ object LabelPropagation {
 
   /** `packedOpt`: a caller-built CSR pack of the symmetrized edges (see
     * Hedonic.run — pack once, run hedonic + PageRank + LPA), honored on
-    * the broadcast-state path; caller owns the cache lifetime and the
-    * `weighted` flags must match. */
+    * the broadcast-state path; the caller persists it and owns its cache
+    * lifetime, and the `weighted` flags must match. */
   def run(edges: Dataset[Edge], initOpt: Option[DataFrame] = None,
           maxIter: Int = 30, parityGating: Boolean = true,
           weighted: Boolean = false,
@@ -69,27 +69,20 @@ object LabelPropagation {
     val init = initOpt
       .map(_.select(col("id"), col("label")))
       .getOrElse(GraphOps.vertices(edges).select(col("id"), col("id").as("label")))
-    // one capped materialization = strategy decision + driver-state collect
-    // (see Hedonic.run, also for the clamped-cap comparison)
-    val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val initCap = init.limit(cap + 1).collect()
-    if (initCap.length <= cap) {
-      // Broadcast-state strategy iterates over the dense-index CSR-packed
-      // adjacency (see PackedAdjacency / stepPlanPackedIdxDelta); a hub
-      // graph falls through to the shuffle loop.
-      packedOpt.foreach(p => require(p.weighted == weighted,
-        s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
-      val packed = packedOpt.getOrElse {
-        val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-        val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-        graft.graph.PackedAdjacency.build(symDf, "src", weighted, deferCache = true)
-      }
-      val (ids, labs) = graft.util.StateMap.columns(initCap)
-      graft.graph.PackedAdjacency.indexed(packed, ids, owned = packedOpt.isEmpty) match {
-        case Some(pidx) =>
-          return runDriverState(edges.sparkSession, pidx, ids, labs, maxIter, parityGating)
-        case None => ()
-      }
+    // one capped materialization = strategy decision + driver-state
+    // collect (StateMap.withinBudget). Broadcast-state strategy iterates
+    // over the dense-index CSR-packed adjacency (see PackedAdjacency /
+    // stepPlanPackedIdxDelta); a hub graph falls through to the shuffle
+    // loop.
+    graft.util.StateMap.withinBudget(init, broadcastStateMaxRows) match {
+      case Some(initRows) =>
+        val (ids, labs) = graft.util.StateMap.columns(initRows)
+        graft.graph.PackedAdjacency.indexedFor(edges, ids, weighted, packedOpt) match {
+          case Some(pidx) =>
+            return runDriverState(edges.sparkSession, pidx, ids, labs, maxIter, parityGating)
+          case None => ()
+        }
+      case None => ()
     }
     // Shuffle path (over budget, or a hub graph): cached pre-partitioned on
     // dst (the join key); only the V-row label side re-exchanges per round.
@@ -132,12 +125,11 @@ object LabelPropagation {
   def bestLabels(sym: DataFrame, labels: DataFrame, weighted: Boolean = false,
                  broadcastStateMaxRows: Long = 4000000L): DataFrame = {
     val spark = labels.sparkSession
-    // clamped-cap comparison: see Hedonic.run
-    val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val lab0 = labels.select("id", "label").limit(cap + 1).collect()
-    if (lab0.length > cap)
-      return step(sym, labels, weighted).select(col("id"), col("bestLabel"))
     import graft.util.StateMap
+    val lab0 = StateMap.withinBudget(labels.select("id", "label"), broadcastStateMaxRows) match {
+      case Some(rows) => rows
+      case None       => return step(sym, labels, weighted).select(col("id"), col("bestLabel"))
+    }
     val n = lab0.length
     val (ids, labs) = StateMap.columns(lab0)
     val idx = new scala.collection.mutable.LongMap[Int](n * 2)

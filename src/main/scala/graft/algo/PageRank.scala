@@ -10,14 +10,11 @@ import graft.io.Iterate
   * north-rule addition N1 (SURVEY.md §2.9); no direct reference
   * implementation exists, so semantics follow the standard formulation:
   *
-  *   r'(v) = (1-d)/V + d * ( sum_{u->v} r(u)/outdeg(u) + danglingMass/V )
+  *   r'(v) = (1-d)/V + d * sum_{u->v} r(u)/outdeg(u)
   *
-  * Ranks sum to 1 at every iteration. On a symmetrized graph whose vertex
-  * set is edge-derived there are no dangling vertices, so the per-iteration
-  * dangling-mass job is SKIPPED entirely in that case (it is pure fixed
-  * driver cost in exactly the loop where scaling efficiency is measured);
-  * it runs only when a caller passes an explicit vertex table, which may
-  * contain isolated vertices.
+  * The vertex set is edge-derived, so on the symmetrized graph every
+  * vertex has degree >= 1: there are no dangling vertices, no dangling
+  * mass to redistribute, and ranks sum to 1 at every iteration.
   *
   * `weighted = true` splits rank proportionally to edge weight
   * (contribution = r(u) * w(u,v) / strength(u), strength = sum of incident
@@ -28,8 +25,8 @@ import graft.io.Iterate
   * size (the same decision Spark itself makes between broadcast-hash and
   * sort-merge joins):
   *
-  *  - broadcast-state (V <= broadcastStateMaxRows, no explicit vertex
-  *    table, hub-free graph): the rank vector lives in DRIVER arrays
+  *  - broadcast-state (V <= broadcastStateMaxRows, hub-free graph): the
+  *    rank vector lives in DRIVER arrays
   *    between iterations; each round it re-enters the plan as one bare
   *    primitive array broadcast read by a codegen'd per-vertex kernel
   *    over the dense-index CSR-packed in-neighbor lists
@@ -39,7 +36,7 @@ import graft.io.Iterate
   *    with cores (the N->4N efficiency target): both the E-row exchange
   *    that saturates single-host shuffle bandwidth and the serial
   *    per-iteration driver cost (broadcast-build jobs, pins) are gone.
-  *  - co-partitioned shuffle (large V, or a hub graph — a segmented pack
+  *  - co-partitioned shuffle (large V, or a hub graph — PackedAdj.hub
   *    has no index plan): edges cached partitioned on src
   *    (the join key); only the V-row state shuffles into the join, and the
   *    E-row contribution aggregate exchanges on dst. This is the 1e9-vertex
@@ -70,9 +67,8 @@ object PageRank {
       // Iteration-cache partition count (see Hedonic.Config.cachePartitions).
       cachePartitions: Option[Int] = None)
 
-  def run(edges: Dataset[Edge], cfg: Config = Config(),
-          verticesOpt: Option[DataFrame] = None): DataFrame =
-    runTimed(edges, cfg, verticesOpt)._1
+  def run(edges: Dataset[Edge], cfg: Config = Config()): DataFrame =
+    runTimed(edges, cfg)._1
 
   /** run() plus per-iteration wall-clock millis, so benchmarks can report
     * setup (vertex/degree/adjacency build) and iteration throughput as
@@ -84,94 +80,62 @@ object PageRank {
     * set), honored on the broadcast-state path. Pack once, run hedonic +
     * PageRank + LPA: the degree table is then derived from the cached
     * V-row pack (size(nbrs) / sum(wts)) instead of a second E-row
-    * aggregate. Caller owns the pack's cache lifetime; its `weighted`
-    * flag must match cfg.weighted. A hub pack (maxSegs > 1) has no index
-    * plan: such a run takes the shuffle loop and never reads the pack. */
+    * aggregate. The caller persists the pack and owns its cache lifetime;
+    * its `weighted` flag must match cfg.weighted. A hub pack has no index
+    * plan, so such a run (like an over-budget one) takes the shuffle loop
+    * and never reads the pack. */
   def runTimed(edges: Dataset[Edge], cfg: Config = Config(),
-          verticesOpt: Option[DataFrame] = None,
           packedOpt: Option[graft.graph.PackedAdj] = None): (DataFrame, Seq[Long]) = {
-    packedOpt.foreach(p => require(p.weighted == cfg.weighted,
-      s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
-    // Round-6 setup dedup for the COMMON case (edge-derived vertex set, no
-    // prebuilt pack): ONE E-row degree aggregate yields the vertex count
-    // (the strategy decision), the pack build's segmentation degrees, and
-    // the rank-degree table. The old path made three separate passes over
-    // the symmetrized edges (a 2E-row vertices().distinct(), the build's
-    // own degree aggregate, and the rank-degree aggregate).
-    if (verticesOpt.isEmpty && packedOpt.isEmpty) {
-      val spark = edges.sparkSession
-      val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-      val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-      val degAgg =
-        (if (cfg.weighted)
-          symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"),
-            sum(col("weight").cast("double")).as("deg"))
-        else
-          symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))).persist()
-      val v = degAgg.count().toDouble
-      val deg =
-        if (cfg.weighted) degAgg.select(col("id"), col("deg"))
-        else degAgg.select(col("id"), col("d").cast("double").as("deg"))
-      if (v <= cfg.broadcastStateMaxRows) {
-        val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-          deferCache = true, partitions = cfg.packPartitions,
-          cachePartitions = cfg.cachePartitions,
-          degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
-        runDriverState(spark, packed, owned = true, deg, v, cfg) match {
-          case Some(out) => degAgg.unpersist(); return out
-          case None      => () // hub graph: the shuffle loop below
-        }
-      }
-      // over-budget V or a hub graph: co-partitioned shuffle path, no
-      // dangling (min deg 1)
-      val out = runShuffle(edges, cfg, deg, v, mayDangle = false)
-      degAgg.unpersist()
-      return out
-    }
-    // A hub-free prebuilt pack with the edge-derived vertex set: vertex
-    // count and degrees come off the cached V-row pack (one row per vertex
-    // — size(nbrs) / sum(wts)) instead of a 2E-row distinct and a second
-    // E-row aggregate over the raw edges.
+    graft.graph.PackedAdjacency.requireWeighted(packedOpt, cfg.weighted)
+    val spark = edges.sparkSession
+    // A hub-free shared pack: vertex count and degrees come off the cached
+    // V-row pack (one row per vertex — size(nbrs) / sum(wts)) instead of
+    // an E-row aggregate over the raw edges.
     packedOpt match {
-      case Some(p) if verticesOpt.isEmpty && p.maxSegs == 1 =>
+      case Some(p) if !p.hub =>
         val v = p.df.count().toDouble
         if (v <= cfg.broadcastStateMaxRows) {
           val deg =
             if (cfg.weighted)
               p.df.select(col("id"), aggregate(col("wts"), lit(0.0), (acc, x) => acc + x).as("deg"))
             else p.df.select(col("id"), size(col("nbrs")).cast("double").as("deg"))
-          return runDriverState(edges.sparkSession, p, owned = false, deg, v, cfg).get
+          return runDriverState(spark, p, deg, v, cfg).get
         }
       case _ => ()
     }
-    // Shuffle path: an explicit vertex table (it may contain dangling
-    // vertices, whose left-join handling needs the co-partitioned path),
-    // over-budget V, or a hub pack — which the shuffle path ignores, so
-    // the vertex table is derived here.
-    val verts = verticesOpt.getOrElse(GraphOps.vertices(edges)).select("id").persist()
-    val v = verts.count().toDouble
-    val symForDeg = GraphOps.symmetrize(edges)
-    val deg =
-      if (cfg.weighted)
-        symForDeg.groupBy(col("src").as("id"))
-          .agg(sum(col("weight").cast("double")).as("deg"))
+    // ONE E-row degree aggregate yields the vertex count (the strategy
+    // decision), the pack build's degrees and the rank-degree table.
+    val symDf = GraphOps.symPairs(edges, cfg.weighted)
+    val degAgg =
+      (if (cfg.weighted)
+        symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"),
+          sum(col("weight").cast("double")).as("deg"))
       else
-        symForDeg.groupBy(col("src").as("id"))
-          .agg(count(lit(1)).cast("double").as("deg"))
-    // edge-derived vertex sets have min degree 1 by construction — the
-    // dangling machinery only wakes up for explicit vertex tables.
-    val vdegIn = verts.join(deg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0.0)).as("deg"))
-    val out = runShuffle(edges, cfg, vdegIn, v, mayDangle = verticesOpt.isDefined)
-    verts.unpersist()
+        symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))).persist()
+    val v = degAgg.count().toDouble
+    val deg =
+      if (cfg.weighted) degAgg.select(col("id"), col("deg"))
+      else degAgg.select(col("id"), col("d").cast("double").as("deg"))
+    // A shared pack lands here only over budget or as a hub: no own build.
+    if (packedOpt.isEmpty && v <= cfg.broadcastStateMaxRows) {
+      val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
+        partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
+        degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
+      runDriverState(spark, packed, deg, v, cfg) match {
+        case Some(out) => degAgg.unpersist(); return out
+        case None      => () // hub graph: the shuffle loop below
+      }
+    }
+    val out = runShuffle(edges, cfg, deg, v)
+    degAgg.unpersist()
     out
   }
 
-  /** Co-partitioned shuffle loop (over-budget V or explicit vertex table).
-    * `vdegIn` is the (id, deg) table — precomputed by the caller so the
-    * common path shares one degree aggregate across setup consumers. */
+  /** Co-partitioned shuffle loop (over-budget V or a hub graph). `vdegIn`
+    * is the (id, deg) table — precomputed by the caller so one degree
+    * aggregate serves every setup consumer. */
   private def runShuffle(edges: Dataset[Edge], cfg: Config, vdegIn: DataFrame,
-      v: Double, mayDangle: Boolean): (DataFrame, Seq[Long]) = {
+      v: Double): (DataFrame, Seq[Long]) = {
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     // Shuffle path: cached pre-partitioned on src (the join key); only the
     // V-row rank side re-exchanges per iteration.
@@ -187,13 +151,7 @@ object PageRank {
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
     while (!done && iter < nIter) {
       val t0 = System.nanoTime()
-      val dangling =
-        if (mayDangle)
-          ranks.filter(col("deg") === 0.0)
-            .agg(coalesce(sum("rank"), lit(0.0))).collect()(0).getDouble(0)
-        else 0.0
-      val plan = iterPlan(sym, ranks, vdeg, v, dangling,
-        withDelta = cfg.fixedIter.isEmpty, cfg)
+      val plan = iterPlan(sym, ranks, vdeg, v, withDelta = cfg.fixedIter.isEmpty, cfg)
       if (cfg.fixedIter.isEmpty) {
         // tol mode: |delta| vs the previous ranks rides the SAME plan; the
         // pin job below both materializes and sums it (zero extra jobs).
@@ -228,16 +186,14 @@ object PageRank {
     * array broadcast once; degrees never change). The rank update stays
     * IN-PLAN, same arithmetic shape as the shuffle path's expression;
     * only the tol-mode |delta| sum moves to the driver (same values,
-    * different summation order — a stopping heuristic, not a result). No
-    * dangling term: this path requires an edge-derived vertex set (min
-    * degree 1). */
+    * different summation order — a stopping heuristic, not a result). */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, owned: Boolean, deg: DataFrame, v: Double,
+      packed: graft.graph.PackedAdj, deg: DataFrame, v: Double,
       cfg: Config): Option[(DataFrame, Seq[Long])] = {
     import spark.implicits._
     lazy val vd = deg.collect() // only for a hub-free pack
     lazy val ids = vd.map(_.getLong(0))
-    val pidxOpt = graft.graph.PackedAdjacency.indexed(packed, ids, owned)
+    val pidxOpt = graft.graph.PackedAdjacency.indexed(packed, ids)
     if (pidxOpt.isEmpty) return None
     val pidx = pidxOpt.get
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -248,22 +204,11 @@ object PageRank {
     val qR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
     val degArrROpt =
       if (cfg.weighted) Some(new StateMap.Ref(sc.broadcast(degs.clone()))) else None
-    // V rows come back per iteration — collected as per-partition
-    // PRIMITIVE (position, rank) arrays straight off the codegen'd
-    // InternalRow iterator instead of boxed Rows (the Row decode is
-    // driver-serial and does not shrink with cluster size). Built once;
-    // each collect() re-serializes the closure so the Ref-carried
-    // broadcast handles are fresh per round.
-    val rankRdd = iterPlanPackedIdx(pidx, qR, degArrROpt, v, cfg)
-      .queryExecution.toRdd.mapPartitions { it =>
-        val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-        val rb = new scala.collection.mutable.ArrayBuilder.ofDouble
-        while (it.hasNext) {
-          val r = it.next()
-          pb += r.getInt(0); rb += r.getDouble(1)
-        }
-        Iterator.single((pb.result(), rb.result()))
-      }
+    // V rows come back per iteration as per-partition PRIMITIVE
+    // (position, rank) arrays (DeltaState.values). Built once; each
+    // collect() re-serializes the closure so the Ref-carried broadcast
+    // handles are fresh per round.
+    val rankRdd = graft.util.DeltaState.values(iterPlanPackedIdx(pidx, qR, degArrROpt, v, cfg))
     var ranks = Array.fill(n)(1.0 / v)
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
     val timing = sys.env.get("SPARK_GRAFT_STEP_TIMING").exists(_.toBoolean)
@@ -317,10 +262,11 @@ object PageRank {
   }
 
   /** One co-partitioned-shuffle iteration's (unpinned) next-state plan —
-    * exposed so StrategySpec can inspect the physical shape. */
+    * exposed so StrategySpec can inspect the physical shape. The `+ 0.0`
+    * term keeps the rank expression's shape identical to iterPlanMap's and
+    * iterPlanPackedIdx's, so the strategies agree to summation order. */
   private[graft] def iterPlan(sym: DataFrame, ranks: DataFrame, vdeg: DataFrame,
-      v: Double, dangling: Double, withDelta: Boolean,
-      cfg: Config): DataFrame = {
+      v: Double, withDelta: Boolean, cfg: Config): DataFrame = {
     val contribCol =
       if (cfg.weighted) col("rank") * col("weight") / col("deg")
       else col("rank") / col("deg")
@@ -332,7 +278,7 @@ object PageRank {
       .groupBy(col("dst").as("id")).agg(sum("c").as("s"))
     val newRank =
       lit((1.0 - cfg.damping) / v) +
-        lit(cfg.damping) * (coalesce(col("s"), lit(0.0)) + lit(dangling / v))
+        lit(cfg.damping) * (coalesce(col("s"), lit(0.0)) + lit(0.0))
     val base = vdeg.join(contribs, Seq("id"), "left")
     if (withDelta) {
       val oldSide = ranks.select(col("id"), col("rank").as("old"))

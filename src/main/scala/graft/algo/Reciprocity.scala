@@ -70,8 +70,7 @@ object Reciprocity {
           weighted: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    val sym = GraphOps.symmetrize(edges).select(symCols.map(col): _*).persist()
+    val sym = GraphOps.symPairs(edges, weighted).persist()
     sym.count()
     var members = GraphOps.vertices(edges)
       .select(col("id"), col("id").as("community"))

@@ -173,14 +173,12 @@ object Spectral {
     val nL = degAgg.count()
     if (nL <= broadcastStateMaxRows) {
       val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
-        deferCache = true,
         degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
       // ids/degrees/x0 in one collect (hub-free packs only); x0 evaluated
       // by the SAME column expression the DataFrame path uses.
       lazy val rows = degAgg.select(col("id"), col("d").cast("double").as("deg"),
         Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")).collect()
-      val pidxOpt = graft.graph.PackedAdjacency.indexed(packed,
-        rows.map(_.getLong(0)), owned = true)
+      val pidxOpt = graft.graph.PackedAdjacency.indexed(packed, rows.map(_.getLong(0)))
       if (pidxOpt.isDefined) {
         import graft.util.StateMap
         val sc = spark.sparkContext
@@ -200,17 +198,8 @@ object Spectral {
         }
         val sigma = 3.0 * dmax + 1.0
         val xR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
-        val sumDf = pidx.df.select(col("myIdx"),
-          GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y"))
-        val sumRdd = sumDf.queryExecution.toRdd.mapPartitions { it =>
-          val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-          val yb = new scala.collection.mutable.ArrayBuilder.ofDouble
-          while (it.hasNext) {
-            val r = it.next()
-            pb += r.getInt(0); yb += r.getDouble(1)
-          }
-          Iterator.single((pb.result(), yb.result()))
-        }
+        val sumRdd = graft.util.DeltaState.values(pidx.df.select(col("myIdx"),
+          GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y")))
         var it2 = 0
         while (it2 < iters) {
           var s1 = 0.0
@@ -241,15 +230,7 @@ object Spectral {
         }
         pidx.unpersist()
         degAgg.unpersist()
-        val idsL = ids; val xL = x
-        val slices = math.max(1, math.min(sc.defaultParallelism, n / 65536 + 1))
-        val rdd = sc.parallelize(0 until n, slices)
-          .map(k => org.apache.spark.sql.Row(idsL(k), xL(k)))
-        return spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("x",
-            org.apache.spark.sql.types.DoubleType, nullable = false))))
+        return StateMap.frame(spark, ids, "x", x)
       }
     }
     degAgg.unpersist()

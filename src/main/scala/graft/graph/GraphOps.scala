@@ -34,6 +34,12 @@ object GraphOps {
     edges.toDF().unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")).toDF())
 
+  /** symmetrize() projected to (src, dst), plus weight when `weighted`. */
+  def symPairs(edges: Dataset[Edge], weighted: Boolean): DataFrame = {
+    val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+    symmetrize(edges).select(cols.map(col): _*)
+  }
+
   /** Symmetrized view PRE-PARTITIONED on the superstep join key, sorted
     * within partitions, and persisted (north rule: "hash-partitioned ...
     * adjacency Datasets"). The cached InMemoryRelation reports
@@ -51,8 +57,7 @@ object GraphOps {
     * sorted = false. */
   def pinnedSym(edges: Dataset[Edge], key: String,
                 weighted: Boolean = false, sorted: Boolean = true): DataFrame = {
-    val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    val base = symmetrize(edges).select(cols.map(col): _*).repartition(col(key))
+    val base = symPairs(edges, weighted).repartition(col(key))
     val s = (if (sorted) base.sortWithinPartitions(key) else base).persist()
     s.count()
     s

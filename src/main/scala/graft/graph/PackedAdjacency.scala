@@ -1,14 +1,20 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** CSR-packed adjacency cache + hub segmentation metadata (see
-  * PackedAdjacency.build). `maxSegs == 1` means no vertex exceeded the
-  * segment cap — the only kind of pack the index kernels run on (see
-  * PackedAdjacency.indexed). Caller owns the cache lifetime (unpersist()). */
-final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
+/** CSR-packed adjacency (see PackedAdjacency.build). `hub` means some
+  * vertex has more than the build's `hubCap` neighbors: no index plan
+  * exists for such a graph (see PackedAdjacency.indexed) and nothing
+  * reads its pack. build() never caches; a caller that shares one pack
+  * across several algorithms persists it (cached()) and releases it
+  * (unpersist()). */
+final case class PackedAdj(df: DataFrame, hub: Boolean, weighted: Boolean,
                            degSum: Long = 0L) {
+  /** This pack persisted and materialized, for sharing. A hub pack comes
+    * back as is: no kernel reads it. */
+  def cached(): PackedAdj =
+    if (hub) this else { val p = df.persist(); p.count(); copy(df = p) }
   def unpersist(): Unit = { df.unpersist(); () }
 }
 
@@ -45,25 +51,21 @@ final case class PackedIdxAdj(df: DataFrame, weighted: Boolean, degSum: Long = 0
   * on the common path.
   *
   * Hub safety (the 100-TB concern): a vertex with more neighbors than
-  * `segCap` is split into ceil(deg/segCap) segments keyed by
-  * xxhash64(neighbor) % nsegs, so no single row exceeds ~segCap elements
-  * (8 MB of longs at the default 1<<20) — the bounded-row answer to the
-  * collect_set hub bomb this engine already purged from connected
-  * components. There is ONE superstep kernel per algorithm, and it runs
-  * on the dense-index remap of a hub-free pack (`indexed`); a graph with
-  * a segmented vertex (`maxSegs > 1`) takes its algorithm's co-partitioned
-  * shuffle loop instead. build() learns `maxSegs` from the V-row degree
-  * aggregate before anything is cached, so that fallback costs only the
-  * aggregate, never the E-row sort.
+  * `hubCap` (8 MB of longs at the default 1<<20) would make one unbounded
+  * row — the collect_set hub bomb this engine already purged from
+  * connected components. There is ONE superstep kernel per algorithm,
+  * and it runs on the dense-index remap of a hub-free pack (`indexed`);
+  * a hub graph (`hub`) takes its algorithm's co-partitioned shuffle loop
+  * instead. build() learns `hub` from the V-row degree aggregate before
+  * any E-row plan runs, so that fallback costs only the aggregate, never
+  * the E-row sort.
   *
-  * Arrays are sorted (array_sort) so per-vertex float accumulation order —
-  * and therefore every kernel output — is deterministic across runs and
-  * partitionings.
+  * Arrays are sorted (sortWithinPartitions on (id, n)) so per-vertex
+  * float accumulation order — and therefore every kernel output — is
+  * deterministic across runs and partitionings.
   *
-  * The degree join is broadcast: build() is only used by the
-  * broadcast-state strategy, whose precondition is V small enough to
-  * broadcast. The build costs one E-row shuffle (the groupBy) — the same
-  * price as the row cache's repartition — amortized over all supersteps.
+  * The build costs one E-row shuffle — the same price as the row cache's
+  * repartition — amortized over all supersteps.
   */
 object PackedAdjacency {
 
@@ -77,19 +79,18 @@ object PackedAdjacency {
     * churn made the build GC-bound — measured SLOWER at 32 cores than at
     * 8 (30+40 s stages, half the task time off-CPU). The sort path keeps
     * rows binary end-to-end (UnsafeExternalSorter radix/spill machinery),
-    * and the scan allocates exactly one primitive array per vertex
-    * segment. This is the classic distributed CSR build; the in-partition
-    * sort also hands every kernel a sorted neighbor array for free
-    * (deterministic float accumulation order). */
-  /** Caching: a hub pack (maxSegs > 1) is never persisted — no kernel
-    * reads one. A hub-free pack is persisted unless `deferCache`: the
-    * caller then promises to `reindex` it right away (see `indexed`), and
-    * reindex's single scan both materializes the pack lineage and caches
-    * the INT-position table (half the footprint). Measured necessity: at
-    * 1.67e9 pre-assembly rows on 2x12 GB executors, caching the long-array
-    * table (13.4 GB) while the pack sort runs drove execution memory to
-    * zero; the int table (6.7 GB) fits. Callers that share one pack across
-    * several algorithms leave it persisted. */
+    * and the scan allocates exactly one primitive array per vertex. This
+    * is the classic distributed CSR build; the in-partition sort also
+    * hands every kernel a sorted neighbor array for free (deterministic
+    * float accumulation order). */
+  /** Caching: build() never persists. A driver loop hands the pack
+    * straight to `indexed`, whose single remap scan both materializes the
+    * pack lineage and caches the INT-position table (half the footprint).
+    * Measured necessity: at 1.67e9 pre-assembly rows on 2x12 GB
+    * executors, caching the long-array table (13.4 GB) while the pack
+    * sort runs drove execution memory to zero; the int table (6.7 GB)
+    * fits. A caller that shares one pack across several algorithms
+    * persists it itself (PackedAdj.cached). */
   /** `partitions`: pack-shuffle output count (defaults to the session's
     * shuffle partitions). This sizes the SORT tasks — keep it data-sized;
     * shrinking it to per-core counts made each in-partition sort huge and
@@ -112,7 +113,7 @@ object PackedAdjacency {
     * strategy decision / rank-degree table) pass it so the build does not
     * re-aggregate the E-row input. */
   def build(sym: DataFrame, key: String, weighted: Boolean = false,
-            segCap: Int = 1 << 20, deferCache: Boolean = false,
+            hubCap: Int = 1 << 20,
             partitions: Option[Int] = None,
             cachePartitions: Option[Int] = None,
             degOpt: Option[DataFrame] = None): PackedAdj = {
@@ -121,91 +122,74 @@ object PackedAdjacency {
     val nbr = if (key == "src") "dst" else "src"
     val degAgg = degOpt.getOrElse(sym.groupBy(col(key)).agg(count(lit(1)).as("d")))
     // Stats come from the V-row degree frame, NOT from scanning the packed
-    // table afterwards (the old count()+max(nsegs) pair forced two full
-    // materializations of the pack): degSum = directed half-edge count
-    // (2E on a symmetrized input), maxSegs decides the caching policy
-    // before anything is materialized.
-    val st = degAgg.agg(
-      sum(col("d")),
-      max(ceil(col("d") / lit(segCap.toDouble)).cast("int"))).collect()(0)
+    // table afterwards: degSum = directed half-edge count (2E on a
+    // symmetrized input), and `hub` is known before any E-row plan runs.
+    val st = degAgg.agg(sum(col("d")), max(col("d")).cast("long")).collect()(0)
     val degSum = if (st.isNullAt(0)) 0L else st.getLong(0)
-    val maxSegs = if (st.isNullAt(1)) 1 else st.getInt(1)
-    val nseg = degAgg
-      .select(col(key), ceil(col("d") / lit(segCap.toDouble)).cast("int").as("nsegs"))
-    val keyed = sym.join(broadcast(nseg), Seq(key))
-      .select((Seq(col(key).as("id"),
-        pmod(xxhash64(col(nbr)), col("nsegs").cast("long")).as("seg"),
-        col("nsegs"),
-        col(nbr).as("n")) ++
+    val hub = !st.isNullAt(1) && st.getLong(1) > hubCap
+    val keyed = sym
+      .select((Seq(col(key).as("id"), col(nbr).as("n")) ++
         (if (weighted) Seq(col("weight").cast("double").as("w")) else Nil)): _*)
       .repartition(partitions.getOrElse(
-        sym.sparkSession.sessionState.conf.numShufflePartitions),
-        col("id"), col("seg"))
-      .sortWithinPartitions("id", "seg", "n")
+        sym.sparkSession.sessionState.conf.numShufflePartitions), col("id"))
+      .sortWithinPartitions("id", "n")
     // Two typed assembly branches so the UNWEIGHTED shuffle never carries a
     // constant 0.0 weight column — at 1.67e9 pre-assembly rows that column
     // alone is ~13 GB of shuffle spill for bytes the pack then discards.
-    val packed0 =
+    val packed =
       if (weighted)
         keyed.as[NbrRow].mapPartitions { it =>
-          new Iterator[(Long, Int, Array[Long], Array[Double])] {
+          new Iterator[(Long, Array[Long], Array[Double])] {
             private var cur: NbrRow = if (it.hasNext) it.next() else null
             private val nb = new scala.collection.mutable.ArrayBuilder.ofLong
             private val wb = new scala.collection.mutable.ArrayBuilder.ofDouble
             override def hasNext: Boolean = cur != null
-            override def next(): (Long, Int, Array[Long], Array[Double]) = {
+            override def next(): (Long, Array[Long], Array[Double]) = {
               val id = cur.id
-              val seg = cur.seg
-              val ns = cur.nsegs
               nb.clear(); wb.clear()
               var go = true
               while (go) {
                 nb += cur.n
                 wb += cur.w
                 cur = if (it.hasNext) it.next() else null
-                go = cur != null && cur.id == id && cur.seg == seg
+                go = cur != null && cur.id == id
               }
-              (id, ns, nb.result(), wb.result())
+              (id, nb.result(), wb.result())
             }
           }
-        }.toDF("id", "nsegs", "nbrs", "wts")
+        }.toDF("id", "nbrs", "wts")
       else
         keyed.as[NbrRowU].mapPartitions { it =>
-          new Iterator[(Long, Int, Array[Long])] {
+          new Iterator[(Long, Array[Long])] {
             private var cur: NbrRowU = if (it.hasNext) it.next() else null
             private val nb = new scala.collection.mutable.ArrayBuilder.ofLong
             override def hasNext: Boolean = cur != null
-            override def next(): (Long, Int, Array[Long]) = {
+            override def next(): (Long, Array[Long]) = {
               val id = cur.id
-              val seg = cur.seg
-              val ns = cur.nsegs
               nb.clear()
               var go = true
               while (go) {
                 nb += cur.n
                 cur = if (it.hasNext) it.next() else null
-                go = cur != null && cur.id == id && cur.seg == seg
+                go = cur != null && cur.id == id
               }
-              (id, ns, nb.result())
+              (id, nb.result())
             }
           }
-        }.toDF("id", "nsegs", "nbrs")
-    val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
-    val packed =
-      if (deferCache || maxSegs > 1) packed1
-      else { val p = packed1.persist(); p.count(); p }
-    PackedAdj(packed, maxSegs, weighted, degSum)
+        }.toDF("id", "nbrs")
+    PackedAdj(cachePartitions.fold(packed)(n => packed.repartition(n, col("id"))),
+      hub, weighted, degSum)
   }
 
   /** The entry to the index kernels, shared by every broadcast-state loop:
     * remap `packed` to dense positions of `ids` (see reindex) and release
-    * what the remap replaces — the id -> position broadcast and, when
-    * `owned`, the id-keyed pack (a shared pack stays cached for the
-    * caller's other algorithms). None for a hub graph (maxSegs > 1): no
-    * index plan exists for it, so the caller runs its shuffle loop. `ids`
-    * is evaluated only for a hub-free pack. */
-  def indexed(packed: PackedAdj, ids: => Array[Long], owned: Boolean): Option[PackedIdxAdj] = {
-    if (packed.maxSegs > 1) return None
+    * the id -> position broadcast the remap replaces. `packed` itself is
+    * left as it is: a pack built for this run was never cached, and a
+    * shared one stays cached for the caller's other algorithms. None for
+    * a hub graph: no index plan exists for it, so the caller runs its
+    * shuffle loop. `ids` is evaluated only for a hub-free pack. */
+  def indexed(packed: PackedAdj, ids: => Array[Long]): Option[PackedIdxAdj] = {
+    if (packed.hub) return None
     val sc = packed.df.sparkSession.sparkContext
     val at = ids
     val n = at.length
@@ -215,11 +199,30 @@ object PackedAdjacency {
     // unpersist, not destroy: a lost cache partition re-runs the remap
     // lineage, which still needs the broadcast re-shippable.
     idxB.unpersist()
-    if (owned) packed.unpersist()
     Some(pidx)
   }
 
-  /** Remap a hub-free (`maxSegs == 1`) packed adjacency to dense state
+  /** The broadcast-state setup of Hedonic, HedonicFrontier and LPA: the
+    * dense-index pack of `edges`' symmetrized adjacency over the
+    * positions of `ids`. A caller-built `shared` pack must match
+    * `weighted` and is used as is; otherwise a src-keyed pack is built
+    * for this run. None for a hub graph (see indexed). */
+  def indexedFor(edges: Dataset[graft.model.Edge], ids: => Array[Long],
+                 weighted: Boolean, shared: Option[PackedAdj],
+                 partitions: Option[Int] = None,
+                 cachePartitions: Option[Int] = None): Option[PackedIdxAdj] = {
+    requireWeighted(shared, weighted)
+    val packed = shared.getOrElse(build(GraphOps.symPairs(edges, weighted), "src",
+      weighted, partitions = partitions, cachePartitions = cachePartitions))
+    indexed(packed, ids)
+  }
+
+  /** A caller-built pack must carry the run's `weighted` flag. */
+  def requireWeighted(shared: Option[PackedAdj], weighted: Boolean): Unit =
+    shared.foreach(p => require(p.weighted == weighted,
+      s"prebuilt pack weighted=${p.weighted} but the run has weighted=$weighted"))
+
+  /** Remap a hub-free packed adjacency to dense state
     * indexes (see PackedIdxAdj). `idxB` maps vertex id -> position in the
     * caller's state arrays; ids outside it become -1 (the kernels' skip,
     * mirroring the row plans' join drop). One scan of the packed table,
@@ -230,8 +233,7 @@ object PackedAdjacency {
   private def reindex(packed: PackedAdj,
       idxB: org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap])
       : PackedIdxAdj = {
-    require(packed.maxSegs == 1,
-      "dense-index remap requires a hub-free packed adjacency (maxSegs == 1)")
+    require(!packed.hub, "dense-index remap requires a hub-free packed adjacency")
     val spark = packed.df.sparkSession
     import spark.implicits._
     def at(m: graft.util.StateMap.LongLongMap, k: Long): Int = {
@@ -269,10 +271,9 @@ object PackedAdjacency {
   }
 }
 
-/** One edge endpoint pre-assembly: vertex, segment, segment count, the
-  * neighbor, its weight (0 when unweighted). All-primitive fields so the
-  * assembly scan deserializes without boxing. */
-private[graph] final case class NbrRow(id: Long, seg: Long, nsegs: Int, n: Long, w: Double)
+/** One edge endpoint pre-assembly: vertex, the neighbor, its weight.
+  * All-primitive fields so the assembly scan deserializes without boxing. */
+private[graph] final case class NbrRow(id: Long, n: Long, w: Double)
 
 /** Unweighted twin of NbrRow — no weight column in the pack shuffle. */
-private[graph] final case class NbrRowU(id: Long, seg: Long, nsegs: Int, n: Long)
+private[graph] final case class NbrRowU(id: Long, n: Long)

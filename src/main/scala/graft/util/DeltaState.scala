@@ -244,6 +244,20 @@ object DeltaState {
       Iterator.single((pb.result(), cb.result(), mb.result()))
     }
 
+  /** moves() for a (myIdx, value: double) plan — PageRank's and the
+    * spectral power step's V-row return leg. */
+  def values(plan: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[(Array[Int], Array[Double])] =
+    plan.queryExecution.toRdd.mapPartitions { it =>
+      val pb = new scala.collection.mutable.ArrayBuilder.ofInt
+      val vb = new scala.collection.mutable.ArrayBuilder.ofDouble
+      while (it.hasNext) {
+        val r = it.next()
+        pb += r.getInt(0); vb += r.getDouble(1)
+      }
+      Iterator.single((pb.result(), vb.result()))
+    }
+
   // Seeded from the JVM start time (VERDICT r5 hardening): a plain
   // counter restarts at 1 in every driver JVM, so an executor outliving a
   // driver restart (not possible in standalone/local deployments, where

@@ -148,6 +148,22 @@ object StateMap {
     longLong(ids, vs, j)
   }
 
+  /** The broadcast-state size gate, shared by every strategy decision
+    * that holds no row count yet: `frame`'s rows when there are at most
+    * `budget` of them, else None. ONE materialization decides the
+    * strategy AND (within budget) already IS the driver-state collect;
+    * limit(cap + 1) keeps an over-budget frame off the driver, whose
+    * capped collect then only signals "too big". The cap is clamped to
+    * Int.MaxValue - 2 (cap + 1 rows must fit one array), and the length
+    * is compared against the CLAMPED cap: a budget past the clamp would
+    * otherwise pass a truncated collect. */
+  def withinBudget(frame: org.apache.spark.sql.DataFrame, budget: Long)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    val cap = math.min(budget, Int.MaxValue - 2L).toInt
+    val rows = frame.limit(cap + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
+  }
+
   /** Two-column driver state from collected (id, value) rows: ids and
     * values as parallel primitive arrays, in row order. */
   def columns(rows: Array[org.apache.spark.sql.Row]): (Array[Long], Array[Long]) = {
@@ -168,15 +184,24 @@ object StateMap {
     * LogicalRDD has no stats — so a downstream edge join never tries to
     * broadcast-build the state side. */
   def frame(spark: org.apache.spark.sql.SparkSession, ids: Array[Long], name: String,
-            values: Array[Long]): org.apache.spark.sql.DataFrame = {
+            values: Array[Long]): org.apache.spark.sql.DataFrame =
+    frameOf(spark, ids, name, LongType, values(_))
+
+  /** frame() for a double-valued state column. */
+  def frame(spark: org.apache.spark.sql.SparkSession, ids: Array[Long], name: String,
+            values: Array[Double]): org.apache.spark.sql.DataFrame =
+    frameOf(spark, ids, name, DoubleType, values(_))
+
+  private def frameOf(spark: org.apache.spark.sql.SparkSession, ids: Array[Long],
+      name: String, t: DataType, value: Int => Any): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val n = ids.length
     val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 65536 + 1))
     val rdd = spark.sparkContext.parallelize(0 until n, slices)
-      .map(k => org.apache.spark.sql.Row(ids(k), values(k)))
+      .map(k => org.apache.spark.sql.Row(ids(k), value(k)))
     spark.createDataFrame(rdd, StructType(Seq(
       StructField("id", LongType, nullable = false),
-      StructField(name, LongType, nullable = false))))
+      StructField(name, t, nullable = false))))
   }
 
   private[graft] val refCls = classOf[Ref[_]].getName

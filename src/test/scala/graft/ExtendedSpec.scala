@@ -75,6 +75,16 @@ class HedonicFrontierSpec extends SparkSpec {
       metS.map(m => (m.superstep, m.moved, m.frontier)))
   }
 
+  test("frontier executor rejects a weighted config") {
+    // both frontier loops count friends unweighted: a weighted run would
+    // silently return the unweighted game
+    val e = edgesOf(Fixtures.kite)
+    val init = GraphOps.vertices(e).select(col("id"), col("id").as("community"))
+    intercept[IllegalArgumentException] {
+      HedonicFrontier.run(e, init, Hedonic.Config(weighted = true))
+    }
+  }
+
   test("frontier executor is deterministic (kite)") {
     val e = edgesOf(Fixtures.kite)
     val init = GraphOps.vertices(e).select(col("id"), (col("id") % 3).as("community"))

@@ -8,8 +8,8 @@ import graft.util.{DeltaState, StateMap}
 
 /** Pins the index superstep plans (PackedAdjacency.indexed +
   * PackedKernels, state through the DeltaState transport) decision-
-  * identical to the row-map plans, and the hub branch too: a segmented
-  * pack (segCap = 2) has no index plan, so the run takes its shuffle loop,
+  * identical to the row-map plans, and the hub branch too: a hub pack
+  * (hubCap = 2) has no index plan, so the run takes its shuffle loop,
   * whose first superstep must apply exactly the row-map plan's gated
   * moves. The row-map plans are themselves pinned to the shuffle strategy
   * and the serial oracle by StrategySpec/AlgoSpec, so this closes the
@@ -41,19 +41,17 @@ class PackedSpec extends SparkSpec {
   private def applied(st: Seq[(Long, Long)], rows: Set[(Long, Long, Boolean)]): Map[Long, Long] =
     st.toMap ++ rows.collect { case (id, v, true) => id -> v }
 
-  /** A pack with every vertex of degree > 2 segmented. */
+  /** A pack with every vertex of degree > 2 over the cap: a hub pack. */
   private def hubPack(symDf: DataFrame, weighted: Boolean) = {
-    val p = PackedAdjacency.build(symDf, "src", weighted, segCap = 2)
-    assert(p.maxSegs > 1)
+    val p = PackedAdjacency.build(symDf, "src", weighted, hubCap = 2)
+    assert(p.hub)
     p
   }
 
   /** The dense-index pack over `ids` positions, as the driver loops get it. */
   private def indexed(symDf: DataFrame, key: String, weighted: Boolean,
                       ids: Array[Long]): PackedIdxAdj =
-    PackedAdjacency.indexed(
-      PackedAdjacency.build(symDf, key, weighted, deferCache = true),
-      ids, owned = true).get
+    PackedAdjacency.indexed(PackedAdjacency.build(symDf, key, weighted), ids).get
 
   /** Round-0 driver state of `st` (a full base, no overrides). */
   private def driverState(st: Seq[(Long, Long)], withSizes: Boolean) = {
@@ -261,8 +259,7 @@ class PackedSpec extends SparkSpec {
       val symDf = GraphOps.symmetrize(e).select("src", "dst")
       val ids = fullState.map(_._1).toArray
       val pidx = PackedAdjacency.indexed(
-        PackedAdjacency.build(symDf, "src", deferCache = true, cachePartitions = Some(3)),
-        ids, owned = true).get
+        PackedAdjacency.build(symDf, "src", cachePartitions = Some(3)), ids).get
       val st = driverState(fullState, withSizes = true)
       val qB = new StateMap.Ref(sc.broadcast(Array.fill(34)(1.0 / 34)))
       val h = Hedonic.stepPlanPackedIdxDelta(pidx, st.state, 0.1, lit(true))

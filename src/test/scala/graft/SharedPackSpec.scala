@@ -7,10 +7,10 @@ import graft.graph.{GraphOps, PackedAdjacency}
   * honored by Hedonic.run, PageRank.runTimed and LabelPropagation.run on
   * the broadcast-state path (src- and dst-packs of a symmetric edge set
   * are identical), with results bitwise equal to each algorithm building
-  * its own pack, and the CACHE LIFETIME owned by the caller — the runs
-  * must neither unpersist the shared pack mid-pipeline nor leak their own
-  * reindexed caches. A hub pack has no index plan: its runs take the
-  * shuffle loop. */
+  * its own pack, and the CACHE LIFETIME owned by the caller, who persists
+  * the pack (PackedAdj.cached) — the runs must neither unpersist the
+  * shared pack mid-pipeline nor leak their own reindexed caches. A hub
+  * pack has no index plan: its runs take the shuffle loop. */
 class SharedPackSpec extends SparkSpec {
 
   private val pairs = Seq[(Long, Long)](
@@ -35,12 +35,12 @@ class SharedPackSpec extends SparkSpec {
     // unpersist. (Real pipelines share the PackedAdj instance instead of
     // rebuilding an identical plan, so this aliasing is test-only.)
     val pack = PackedAdjacency.build(
-      GraphOps.symmetrize(e).select("src", "dst"), "src")
+      GraphOps.symmetrize(e).select("src", "dst"), "src").cached()
     val (shH, shMet) = Hedonic.run(e, init, cfgH, packedOpt = Some(pack))
     // the pipeline contract: hedonic must NOT have released the shared pack
     assert(pack.df.storageLevel.useMemory,
       "shared pack was unpersisted by Hedonic.run")
-    val (shPdf, _) = PageRank.runTimed(e, cfgP, None, packedOpt = Some(pack))
+    val (shPdf, _) = PageRank.runTimed(e, cfgP, packedOpt = Some(pack))
     val shP = shPdf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(pack.df.storageLevel.useMemory,
       "shared pack was unpersisted by PageRank.runTimed")
@@ -74,7 +74,7 @@ class SharedPackSpec extends SparkSpec {
     val (own, _) = Hedonic.run(wedges, init, cfg)
     val pack = PackedAdjacency.build(
       GraphOps.symmetrize(wedges).select("src", "dst", "weight"), "src",
-      weighted = true)
+      weighted = true).cached()
     val (sh, _) = Hedonic.run(wedges, init, cfg, packedOpt = Some(pack))
     assert(toMap(sh) == toMap(own))
     pack.unpersist()
@@ -83,9 +83,10 @@ class SharedPackSpec extends SparkSpec {
   }
 
   test("a shared hub pack sends every algorithm to its shuffle loop") {
-    // segCap = 2 segments every vertex of degree > 2: a hub pack, which has
-    // no index plan. Each run must then equal its broadcastStateMaxRows = 0
-    // run, and neither the pack nor a remap of it may stay cached: all the
+    // hubCap = 2 puts every vertex of degree > 2 over the cap: a hub pack,
+    // which has no index plan. Each run must then equal its
+    // broadcastStateMaxRows = 0 run, and neither the pack nor a remap of it
+    // may stay cached (cached() leaves a hub pack alone): all the
     // runs may leave persisted is the shuffle loops' state pins (local
     // checkpoints the caller owns).
     val e = edgesOf(pairs)
@@ -100,11 +101,11 @@ class SharedPackSpec extends SparkSpec {
 
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pack = PackedAdjacency.build(
-      GraphOps.symmetrize(e).select("src", "dst"), "src", segCap = 2)
-    assert(pack.maxSegs > 1)
+      GraphOps.symmetrize(e).select("src", "dst"), "src", hubCap = 2).cached()
+    assert(pack.hub)
     assert(!pack.df.storageLevel.useMemory, "a hub pack must not be cached")
     val (hubH, hubMet) = Hedonic.run(e, init, cfgH, packedOpt = Some(pack))
-    val (hubPdf, _) = PageRank.runTimed(e, cfgP, None, packedOpt = Some(pack))
+    val (hubPdf, _) = PageRank.runTimed(e, cfgP, packedOpt = Some(pack))
     val hubL = toMap(LabelPropagation.run(e, packedOpt = Some(pack)))
     assert(toMap(hubH) == toMap(shufH))
     assert(hubMet.map(m => (m.superstep, m.moved, m.frontier)) ==
@@ -120,12 +121,12 @@ class SharedPackSpec extends SparkSpec {
     val e = edgesOf(pairs)
     val init = membersOf((0L to 7L).map(i => (i, i)))
     val pack = PackedAdjacency.build(
-      GraphOps.symmetrize(e).select("src", "dst"), "src")
+      GraphOps.symmetrize(e).select("src", "dst"), "src").cached()
     intercept[IllegalArgumentException] {
       Hedonic.run(e, init, Hedonic.Config(weighted = true), Some(pack))
     }
     intercept[IllegalArgumentException] {
-      PageRank.runTimed(e, PageRank.Config(weighted = true), None, Some(pack))
+      PageRank.runTimed(e, PageRank.Config(weighted = true), Some(pack))
     }
     pack.unpersist()
   }

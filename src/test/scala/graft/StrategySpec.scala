@@ -105,15 +105,21 @@ class StrategySpec extends SparkSpec {
 
   test("pagerank: broadcast-state and shuffle iterations match at 1e-12") {
     val e = edgesOf(Fixtures.zachary)
-    val b = PageRank.run(e, PageRank.Config(fixedIter = Some(20)))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val s = PageRank.run(e,
-        PageRank.Config(fixedIter = Some(20), broadcastStateMaxRows = 0L))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(b.keySet == s.keySet)
-    // Same arithmetic, different summation order: agreement far below the
-    // 1e-6 fixture-parity bar.
-    b.foreach { case (id, r) => assert(math.abs(r - s(id)) < 1e-12) }
+    val cfg = PageRank.Config(fixedIter = Some(20))
+    def run(budget: Long) =
+      PageRank.runTimed(e, cfg.copy(broadcastStateMaxRows = budget))._1
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val s = run(0L)
+    // the default budget, and the budgets around the n degree rows the
+    // gate counts (n - 1 takes the shuffle loop; n and n + 1 the driver
+    // path). Same arithmetic, different summation order: agreement far
+    // below the 1e-6 fixture-parity bar.
+    val n = graft.graph.GraphOps.vertices(e).count()
+    Seq(cfg.broadcastStateMaxRows, n - 1, n, n + 1).foreach { budget =>
+      val b = run(budget)
+      assert(b.keySet == s.keySet)
+      b.foreach { case (id, r) => assert(math.abs(r - s(id)) < 1e-12, s"budget $budget id $id") }
+    }
   }
 
   /** Shuffle exchanges on the plan SPINE — i.e. moving edge-scale rows.
@@ -179,37 +185,55 @@ class StrategySpec extends SparkSpec {
     assert(b == s)
   }
 
-  // --- budget gates at Long.MaxValue: every gate compares the capped
-  // collect against the CLAMPED cap (Int.MaxValue - 2), so an unbounded
-  // budget takes the driver path on the full input, never on a truncated
-  // collect, and decides exactly as the default budget does.
+  // --- budget gates: every gate compares the capped collect against the
+  // CLAMPED cap (Int.MaxValue - 2), so an unbounded budget takes the
+  // driver path on the full input, never on a truncated collect. Each case
+  // also runs the budgets around the n rows its gate counts (n - 1 takes
+  // the shuffle loop; n and n + 1 the driver path): every budget, the
+  // default included, must give the budget-0 shuffle result.
   private val unbounded = Long.MaxValue
+  private def budgets(n: Long, default: Long): Seq[Long] =
+    Seq(default, n - 1, n, n + 1, unbounded)
+
+  test("StateMap.withinBudget: n rows pass at budget n and Long.MaxValue, not at n - 1") {
+    val df = edgesOf(pairs).toDF()
+    val all = df.collect().toSet
+    val n = all.size.toLong
+    assert(graft.util.StateMap.withinBudget(df, n).map(_.toSet) == Some(all))
+    assert(graft.util.StateMap.withinBudget(df, n - 1).isEmpty)
+    assert(graft.util.StateMap.withinBudget(df, unbounded).map(_.toSet) == Some(all))
+  }
 
   test("budget Long.MaxValue: Hedonic.run matches the default budget") {
     val e = edgesOf(pairs)
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
     val cfg = Hedonic.Config(maxSupersteps = 40)
-    val (mD, metD) = Hedonic.run(e, init, cfg)
-    val (mU, metU) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = unbounded))
-    assert(toMap(mU) == toMap(mD))
-    assert(metU.map(m => (m.superstep, m.moved, m.frontier)) ==
-      metD.map(m => (m.superstep, m.moved, m.frontier)))
+    def run(budget: Long) = {
+      val (m, met) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = budget))
+      (toMap(m), met.map(x => (x.superstep, x.moved, x.frontier)))
+    }
+    val shuffle = run(0L)
+    budgets(init.count(), cfg.broadcastStateMaxRows)
+      .foreach(b => assert(run(b) == shuffle, s"budget $b"))
   }
 
   test("budget Long.MaxValue: HedonicFrontier.run matches the default budget") {
     val e = edgesOf(pairs)
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
     val cfg = Hedonic.Config(maxSupersteps = 40)
-    val (mD, _) = graft.algo.HedonicFrontier.run(e, init, cfg)
-    val (mU, _) = graft.algo.HedonicFrontier.run(e, init,
-      cfg.copy(broadcastStateMaxRows = unbounded))
-    assert(toMap(mU) == toMap(mD))
+    def run(budget: Long) =
+      toMap(graft.algo.HedonicFrontier.run(e, init, cfg.copy(broadcastStateMaxRows = budget))._1)
+    val shuffle = run(0L)
+    budgets(init.count(), cfg.broadcastStateMaxRows)
+      .foreach(b => assert(run(b) == shuffle, s"budget $b"))
   }
 
   test("budget Long.MaxValue: LabelPropagation.run matches the default budget") {
     val e = edgesOf(pairs)
-    assert(toMap(LabelPropagation.run(e, broadcastStateMaxRows = unbounded)) ==
-      toMap(LabelPropagation.run(e)))
+    def run(budget: Long) = toMap(LabelPropagation.run(e, broadcastStateMaxRows = budget))
+    val shuffle = run(0L)
+    budgets(graft.graph.GraphOps.vertices(e).count(), 4000000L)
+      .foreach(b => assert(run(b) == shuffle, s"budget $b"))
   }
 
   test("budget Long.MaxValue: LabelPropagation.bestLabels matches the default budget") {
@@ -217,14 +241,28 @@ class StrategySpec extends SparkSpec {
     val labels = graft.graph.GraphOps.vertices(e)
       .select(col("id"), (col("id") % 3).as("label"))
     val symP = graft.graph.GraphOps.symmetrize(e).select("src", "dst")
-    assert(toMap(LabelPropagation.bestLabels(symP, labels, broadcastStateMaxRows = unbounded)) ==
-      toMap(LabelPropagation.bestLabels(symP, labels)))
+    def run(budget: Long) =
+      toMap(LabelPropagation.bestLabels(symP, labels, broadcastStateMaxRows = budget))
+    val shuffle = run(0L)
+    budgets(labels.count(), 4000000L).foreach(b => assert(run(b) == shuffle, s"budget $b"))
   }
 
   test("budget Long.MaxValue: ConnectedComponents.run matches the default budget") {
     val e = edgesOf(pairs ++ Seq[(Long, Long)]((10, 11), (11, 12)))
-    assert(toMap(graft.algo.ConnectedComponents.run(e, maxDriverEdges = unbounded)) ==
-      toMap(graft.algo.ConnectedComponents.run(e)))
+    def run(budget: Long) = toMap(graft.algo.ConnectedComponents.run(e, maxDriverEdges = budget))
+    val shuffle = run(0L)
+    budgets(e.count(), 4000000L).foreach(b => assert(run(b) == shuffle, s"budget $b"))
+  }
+
+  test("budget boundaries: Spectral.wholeGraphVector matches the shuffle loop at 5 dp") {
+    // q_spectral1's rounding; n = the degree rows the gate counts
+    val e = edgesOf(pairs)
+    def run(budget: Long) = graft.algo.Spectral.wholeGraphVector(e, iters = 20, budget)
+      .select(col("id"), round(col("x"), 5)).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val shuffle = run(0L)
+    budgets(graft.graph.GraphOps.vertices(e).count(), 4000000L)
+      .foreach(b => assert(run(b) == shuffle, s"budget $b"))
   }
 
   test("indexed superstep plans contain zero spine shuffle exchanges") {
@@ -237,8 +275,7 @@ class StrategySpec extends SparkSpec {
       val sc = spark.sparkContext
       val ids = (0L to 7L).toArray
       val pidx = PackedAdjacency.indexed(PackedAdjacency.build(
-        GraphOps.symmetrize(e).select("src", "dst"), "src", deferCache = true),
-        ids, owned = true).get
+        GraphOps.symmetrize(e).select("src", "dst"), "src"), ids).get
       val state = new DeltaState.DriverState(sc, ids.clone(), withSizes = true)
       state.publish(0)
       val hplan = Hedonic.stepPlanPackedIdxDelta(pidx, state.state, 0.25, lit(true))
